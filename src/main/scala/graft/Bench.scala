@@ -196,17 +196,8 @@ object Bench {
 
   private def mainLocked(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 4)
     // JVM/codegen warm-up outside the timed region: a representative
     // join+aggregate query, so scan/join/agg/codegen paths are all JIT'd
     // before the first timed query (a bare limit(10) left ~7 s of JIT
@@ -216,10 +207,7 @@ object Bench {
     val prior = priorTimes(sfDir)
     // dev-only subset filter (same contract as Verify); the driver
     // sets no filter and always benches every query
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').toSeq.filter(_.nonEmpty))
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
+    val queries = GraftSession.queries(sys.env.get("SPARK_GRAFT_ONLY"))
     val firstPass = queries.map { case (name, fn) =>
       val secs = timeQuery(spark, sfDir, reps, name, fn)
       System.err.println(f"[bench] $name%-40s $secs%8.2f s (min of $reps)")

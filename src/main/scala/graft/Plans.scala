@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.FormattedMode
 
 /** Dev tool: dump `.explain("formatted")` for declared queries into
@@ -17,24 +16,9 @@ object Plans {
     val sfDir = args(0)
     val outDir = new java.io.File(args(1))
     val suffix = args(2)
-    val only: Option[Seq[String]] =
-      if (args.length > 3 && args(3).nonEmpty)
-        Some(args(3).split(',').toSeq.filter(_.nonEmpty))
-      else None
     outDir.mkdirs()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.forall(_.exists(name.contains)) }
-    for ((name, fn) <- queries) {
+    val spark = GraftSession.local(defaultCpus = 4)
+    for ((name, fn) <- GraftSession.queries(args.lift(3).filter(_.nonEmpty))) {
       try {
         val df = fn(spark, sfDir)
         val txt = df.queryExecution.explainString(FormattedMode)

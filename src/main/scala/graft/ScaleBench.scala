@@ -465,17 +465,8 @@ object ScaleBench {
   private def mainLocked(): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val mult = sys.env.getOrElse("SPARK_GRAFT_SCALE_MULT", "10").toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val reps = sys.env.getOrElse("SPARK_GRAFT_REPS", "2").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 32)
 
     val scaledDir = materializeScaled(spark, sfDir, mult)
     // JIT warm-up on a family-representative query (see Bench)
@@ -507,10 +498,8 @@ object ScaleBench {
     // and records an empty counters map
     val skipCounters =
       sys.env.contains("SPARK_GRAFT_SCALE_SKIP_COUNTERS")
-    val only = sys.env.get("SPARK_GRAFT_SCALE_ONLY")
-      .map(_.split(',').toSeq.filter(_.nonEmpty))
-    val family = Family
-      .filter(name => only.forall(_.exists(name.contains)))
+    val family = Family.filter(
+      GraftSession.keep(sys.env.get("SPARK_GRAFT_SCALE_ONLY")))
     val passes = (1 to nPasses).map { p =>
       family.map { name =>
         val fn = SparkEntry.queries(name)

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 
 /** Dev-only measurement harness (not part of the driver contract, not
@@ -15,24 +14,14 @@ object Scratch {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val only = args(2).split(',').toSeq.filter(_.nonEmpty)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
     // ad-hoc A/B configs: SCRATCH_CONF="k=v;k=v"
-    sys.env.get("SCRATCH_CONF").toSeq
+    val conf = sys.env.get("SCRATCH_CONF").toSeq
       .flatMap(_.split(';')).map(_.trim).filter(_.contains('='))
-      .foreach { kv =>
+      .map { kv =>
         val Array(k, v) = kv.split("=", 2)
-        builder.config(k, v)
+        k -> v
       }
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 32, conf)
     val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
     val detail = sys.env.get("SCRATCH_JOBS").contains("1")
     val starts = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
@@ -54,9 +43,7 @@ object Scratch {
     // warm-up
     graft.operators.Reports.q04CrossNation(spark, sfDir)
       .write.format("noop").mode("overwrite").save()
-    val queries = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.exists(name.contains) }
-    for ((name, fn) <- queries) {
+    for ((name, fn) <- GraftSession.queries(Some(args(2)))) {
       for (r <- 1 to reps) {
         spark.catalog.clearCache(); System.gc()
         val j0 = jobs.get()

@@ -1,31 +1,18 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local(defaultCpus = 4)
     new java.io.File(outDir).mkdirs()
     // queries are independent jobs — run a few concurrently so small
     // stages overlap (Spark schedules concurrent actions fine)
     val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
     // dev-only subset filter (comma-separated substrings); the driver
     // sets no filter and always dumps every query
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(',').toSeq.filter(_.nonEmpty))
-    val selected = SparkEntry.queries.toSeq.filter { case (name, _) =>
-      only.forall(_.exists(name.contains)) }
+    val selected = GraftSession.queries(sys.env.get("SPARK_GRAFT_ONLY"))
     val tasks = selected.map { case (name, fn) =>
       pool.submit(new Runnable {
         def run(): Unit =

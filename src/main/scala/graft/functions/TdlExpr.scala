@@ -410,7 +410,7 @@ object TdlExpr {
         resolve("is_order_voucher").cast(BooleanType)
       case "GroupStock" => lit("Stock-in-Hand")
       case "IsLedOfGrp" =>
-        val _ = colArg(); val _2 = colArg()
+        colArg(); colArg()
         err("$$IsLedOfGrp is join-shaped (P16 subtree membership) — " +
           "precompute the group closure with graft.operators.Hierarchy" +
           ".subtreeMembers and resolve it as a boolean column")

@@ -1,6 +1,7 @@
 package graft.operators
 
 import graft.Tables
+import graft.streaming.StagedStream
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -249,7 +250,6 @@ object Curation {
     * stored index is never rewritten, and serving reads only probed
     * list partitions as everywhere else. */
   def q148StreamIndexAppend(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val e = Tables.embeddings(s, dir)
     // staged OUTSIDE the index builder: materializedDir memoizes via
     // computeIfAbsent, and a mapping function must not re-enter the
@@ -267,27 +267,12 @@ object Curation {
         Warehouse.fingerprint(s"$dir/embeddings.parquet")) { d =>
       Similarity.buildIvfIndex(e.filter(col("vec_id") % 4 =!= 3),
         "vec_id", "embedding", d, nLists = 16, assignments = 2)
-      val ss = streamSession(s)
-      val sch = ss.read.parquet(stage).schema
-      val stream = ss.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val qname = "q148_app_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
-        val query = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+      StagedStream.run(s, "q148_app", stage, maxFilesPerTrigger = 1)(
+        (_, in) => in.writeStream.foreachBatch {
+          (batch: DataFrame, _: Long) =>
             Similarity.appendToIvfIndex(batch.sparkSession, batch,
               "vec_id", "embedding", d)
-          }
-          .queryName(qname)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      } finally
-        // foreachBatch sinks have no memory table to drop; reclaim
-        // the run's RAM-backed checkpoint dir on failure too
-        shmCheckpointBase.foreach(b =>
-          Warehouse.deleteRec(new java.io.File(b, qname)))
+        })((_, _) => ())
     }
     Similarity.ivfTopKFromIndex(s, e.filter(col("vec_id") < 10),
         "vec_id", "embedding", idx, k = 10, nProbe = 12)
@@ -384,7 +369,6 @@ object Curation {
     * is read-only, so the union over ANY batch split equals the
     * one-batch q138 answer — the SAME bm25 oracle gates it. */
   def q154StreamBm25Serve(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables.documents(s, dir)
     val idx = storedBm25Index(s, dir)
     val stage = stagedArrival(s, "stage-q154", dir,
@@ -392,35 +376,19 @@ object Curation {
       bm25Queries(docs).repartition(3).write.mode("overwrite")
         .parquet(sd)
     }
-    val ss = streamSession(s)
-    val sch = ss.read.parquet(stage).schema
-    val stream = ss.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
     val out = java.nio.file.Files
       .createTempDirectory("q154-serve-").toString
-    val qname = "q154_srv_" +
-      java.util.UUID.randomUUID().toString.replace("-", "")
-    try {
-      val query = stream.writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+    try StagedStream.run(s, "q154_srv", stage, maxFilesPerTrigger = 1)(
+      (_, in) => in.writeStream.foreachBatch {
+        (batch: DataFrame, _: Long) =>
           Retrieval.bm25TopKFromIndex(batch.sparkSession, batch,
               "query_id", "qtext", idx, k = 10)
             .write.mode("append").parquet(out)
-        }
-        .queryName(qname)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
+      })((_, _) =>
       s.read.parquet(out)
         .orderBy(col("query_id"), col("rank"))
-        .localCheckpoint(true)
-    } finally {
-      // reclaim the RAM-backed checkpoint on failure too, not just
-      // the success path (round-17 review)
-      shmCheckpointBase.foreach(b =>
-        Warehouse.deleteRec(new java.io.File(b, qname)))
-      Warehouse.deleteRec(new java.io.File(out))
-    }
+        .localCheckpoint(true))
+    finally Warehouse.deleteRec(new java.io.File(out))
   }
 
   /** Tombstone deletes on the BM25 index (q161) — q160's retrieval
@@ -1637,7 +1605,6 @@ object Curation {
     * window pass + one partitioned segment append + the ledger write;
     * stored segments are never read (the measured flat-append law). */
   def q158StreamSubstringAppend(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val corpus = q147SplicedDocs(Tables.documents(s, dir))
     // staged OUTSIDE the index builder (materializedDir must not
     // re-enter itself — the q148 lesson)
@@ -1653,25 +1620,12 @@ object Curation {
       TextDedup.buildSubstringIndex(
         corpus.filter(col("doc_id") % 4 =!= 3), "doc_id", "text",
         Q147SpanLen, d)
-      val ss = streamSession(s)
-      val sch = ss.read.parquet(stage).schema
-      val stream = ss.readStream.schema(sch)
-        .option("maxFilesPerTrigger", 1).parquet(stage)
-      val qname = "q158_app_" +
-        java.util.UUID.randomUUID().toString.replace("-", "")
-      try {
-        val query = stream.writeStream
-          .foreachBatch { (batch: DataFrame, _: Long) =>
+      StagedStream.run(s, "q158_app", stage, maxFilesPerTrigger = 1)(
+        (_, in) => in.writeStream.foreachBatch {
+          (batch: DataFrame, _: Long) =>
             TextDedup.appendToSubstringIndex(batch.sparkSession,
               batch, d, "doc_id", "text")
-          }
-          .queryName(qname)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        query.awaitTermination()
-      } finally
-        shmCheckpointBase.foreach(b =>
-          Warehouse.deleteRec(new java.io.File(b, qname)))
+        })((_, _) => ())
     }
     TextDedup.substringSpansFromIndex(s, corpus, "doc_id", "text", idx)
       .orderBy(col("doc_id"))
@@ -2187,68 +2141,6 @@ object Curation {
     Multimodal.audioNearDupGroups(s, Tables.documents(s, dir), "doc_id")
       .orderBy(col("keeper"))
 
-  /** Drain a FINISHED memory-sink stream and free its per-invocation
-    * state: the shaped result is localCheckpoint'ed (bounded — every
-    * stream entry's output is a small rollup/pair/digest table), then
-    * the memory-sink temp view is dropped. Without this, every
-    * invocation leaked a driver-held result table — bench reps
-    * compound it, and full-suite heap pressure was exactly the q107
-    * lesson. (Arrival staging is no longer per-invocation temp state
-    * to delete here — see [[stagedArrival]].) */
-  private def finishStream(s: SparkSession, qname: String)(
-      shape: DataFrame => DataFrame): DataFrame = {
-    val res = shape(s.table(qname)).localCheckpoint(true)
-    s.catalog.dropTempView(qname)
-    // reclaim the run's checkpoint dir NOW (an explicit
-    // checkpointLocation base opts out of Spark's temp auto-delete,
-    // and the shutdown hook never runs on SIGKILL — round-14 review):
-    // under the base each query checkpoints to <base>/<queryName>
-    shmCheckpointBase.foreach(b =>
-      Warehouse.deleteRec(new java.io.File(b, qname)))
-    res
-  }
-
-  /** Dedicated child session for a stream run. Two stream-specific
-    * confs, isolated from the batch entries Verify runs concurrently
-    * (a shared-session mutation would race them):
-    *  - state/shuffle partitioning sized to the micro-batch — a
-    *    one-or-two-file batch gains nothing from 32-way state
-    *    exchanges, it just pays 32 task launches per stateful stage
-    *    per batch (the dominant fixed cost the round-13 plan audit
-    *    flagged); a deployment sizes this to its trigger volume
-    *  - no-data micro-batches off where nothing event-time-times-out
-    *    (every law here except q101's session timeout flush): the
-    *    extra watermark-advance batch is pure machinery
-    * The child shares the SparkContext (and so the warehouse/staging
-    * artifacts); only these session confs diverge. */
-  private def streamSession(s: SparkSession, partitions: Int = 8,
-      noDataBatches: Boolean = false): SparkSession = {
-    val ss = s.newSession()
-    ss.conf.set("spark.sql.shuffle.partitions", partitions.toString)
-    ss.conf.set("spark.sql.streaming.noDataMicroBatches.enabled",
-      noDataBatches.toString)
-    // offset/commit-log churn on memory-backed storage when the host
-    // offers it: every micro-batch fsyncs several small checkpoint
-    // files, pure machinery for an ephemeral availableNow gate run (a
-    // deployment points this at durable storage for exactly-once).
-    // One process-wide base (UUID query names keep runs disjoint
-    // under it), reclaimed by a shutdown hook
-    shmCheckpointBase.foreach(b =>
-      ss.conf.set("spark.sql.streaming.checkpointLocation", b))
-    ss
-  }
-
-  private lazy val shmCheckpointBase: Option[String] = {
-    val shm = new java.io.File("/dev/shm")
-    if (shm.isDirectory && shm.canWrite) {
-      val dir = java.nio.file.Files.createTempDirectory(
-        shm.toPath, "graft-ckpt-")
-      Runtime.getRuntime.addShutdownHook(
-        new Thread(() => Warehouse.deleteRec(dir.toFile)))
-      Some(dir.toString)
-    } else None
-  }
-
   /** Deterministic micro-batch ARRIVAL directory at the warehouse
     * boundary (round-13 verdict #4: ~21 s of the 142 s suite was
     * stream STAGING machinery — per-invocation corpus writes, mtime
@@ -2277,8 +2169,8 @@ object Curation {
     * corpus as four arrival files, assigns each doc a deterministic
     * event time (epoch + doc_id minutes — DuckDB recomputes it), and
     * drives [[graft.streaming.DocStream.qualityMonitor]] through a
-    * REAL `Trigger.AvailableNow` StreamExecution (4 micro-batches via
-    * `maxFilesPerTrigger = 1`) into a complete-mode memory sink; the
+    * REAL `Trigger.AvailableNow` StreamExecution (2 micro-batches via
+    * `maxFilesPerTrigger = 2`) into a complete-mode memory sink; the
     * returned table is the stream's final state.
     *
     * Complete mode is what makes the oracle comparison exact: append
@@ -2295,27 +2187,19 @@ object Curation {
     * any corpus scale; the staging write is one pass over the corpus
     * standing in for the ingest feed a deployment already has. */
   def q97StreamQualityMonitor(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val stage = stagedArrival(s, "stage-q97", dir, "documents.parquet") {
       d => Tables.documents(s, dir)
         .select(col("doc_id"), col("source"), col("lang"), col("text"))
         .repartitionByRange(4, col("doc_id"))
         .write.mode("overwrite").parquet(d)
     }
-    val ss = streamSession(s)
-    val sch = ss.read.parquet(stage).schema
-    val stream = ss.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 2).parquet(stage)
-    val mon = graft.streaming.DocStream.qualityMonitor(
-      stream.withColumn("ts", timestamp_seconds(col("doc_id") * 60)),
-      "ts", "source", "text", "lang")
-    val qname = s"q97_mon_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val query = mon.writeStream.format("memory").queryName(qname)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    // epoch-second window starts dodge timestamp-rendering semantics
-    // (the q60 convention); session is UTC so the cast is exact
-    finishStream(ss, qname)(_
+    StagedStream.toMemory(s, "q97_mon", stage, maxFilesPerTrigger = 2,
+        outputMode = "complete")((_, in) =>
+      graft.streaming.DocStream.qualityMonitor(
+        in.withColumn("ts", timestamp_seconds(col("doc_id") * 60)),
+        "ts", "source", "text", "lang"))(_
+      // epoch-second window starts dodge timestamp-rendering semantics
+      // (the q60 convention); session is UTC so the cast is exact
       .select(col("window_start").cast("long").as("window_start_s"),
         col("source"), col("n_docs"), col("n_tokens"),
         col("mean_quality"), col("lang_mismatch"))
@@ -2339,7 +2223,6 @@ object Curation {
     * (order-independent by construction). Oracle: q60's gap-split
     * SQL rolled up per session. */
   def q101StreamSessions(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.events(s, dir).select(col("event_id"), col("ts"),
       col("user_id"), col("event_type"), col("value"))
     val stage = stagedArrival(s, "stage-q101", dir, "events.parquet") {
@@ -2367,16 +2250,10 @@ object Curation {
           f.setLastModified(t0 + i * 2000L)
         }
     }
-    val ss = streamSession(s, noDataBatches = true)
-    val stream = ss.readStream.schema(ev.schema)
-      .option("maxFilesPerTrigger", 2).parquet(stage)
-    val sessions = graft.streaming.EventStream.sessionize(ss, stream)
-    val qname = s"q101_sess_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val query = sessions.toDF().writeStream.format("memory")
-      .queryName(qname).outputMode("append")
-      .trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    finishStream(ss, qname)(_
+    StagedStream.toMemory(s, "q101_sess", stage, maxFilesPerTrigger = 2,
+        outputMode = "append", noDataBatches = true,
+        schema = Some(ev.schema))((ss, in) =>
+      graft.streaming.EventStream.sessionize(ss, in).toDF())(_
       .filter(col("user_id") >= 0)
       .select(col("user_id"), col("n_events"),
         round(col("total_value"), 6).as("total_value"),
@@ -2396,7 +2273,6 @@ object Curation {
     * independent of the micro-batch split, so the availableNow run
     * must equal q62's exact cross-side Jaccard oracle row for row. */
   def q102StreamIngestDedup(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables.documents(s, dir)
     val incoming = docs.filter(
       substring(md5(col("text")), 1, 1) >= Q62IncomingHex)
@@ -2419,19 +2295,12 @@ object Curation {
     // stateless — no state stores to size down, and the per-batch
     // MinHash fan-out (DocStream's repartition) wants the full core
     // count: 8 partitions measured 1.3 s slower here
-    val ss = streamSession(s, partitions = 32)
-    val sch = ss.read.parquet(stage).schema
-    val stream = ss.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 2).parquet(stage)
-    val pairs = graft.streaming.DocStream.nearDupAgainstIndexTables(
-      stream, ss.read.parquet(s"$idx/keys.parquet"),
-      ss.read.parquet(s"$idx/payload.parquet"),
-      "doc_id", "text", minJaccard = 0.8)
-    val qname = s"q102_ing_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val query = pairs.writeStream.format("memory").queryName(qname)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    finishStream(ss, qname)(
+    StagedStream.toMemory(s, "q102_ing", stage, maxFilesPerTrigger = 2,
+        outputMode = "append", partitions = 32)((ss, in) =>
+      graft.streaming.DocStream.nearDupAgainstIndexTables(
+        in, ss.read.parquet(s"$idx/keys.parquet"),
+        ss.read.parquet(s"$idx/payload.parquet"),
+        "doc_id", "text", minJaccard = 0.8))(
       _.orderBy(col("existing_id"), col("incoming_id")))
   }
 
@@ -2445,7 +2314,6 @@ object Curation {
     * the same hits with q84's passage law in SQL. Statelessness
     * again makes the hit set independent of the micro-batch split. */
   def q103StreamPassageHits(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables.documents(s, dir)
     val incoming = docs.filter(
       substring(md5(col("text")), 1, 1) >= Q62IncomingHex)
@@ -2458,17 +2326,10 @@ object Curation {
       d => incoming.select(col("doc_id"), col("text"))
         .repartition(4).write.mode("overwrite").parquet(d)
     }
-    val ss = streamSession(s)
-    val sch = ss.read.parquet(stage).schema
-    val stream = ss.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 2).parquet(stage)
-    val hits = graft.streaming.DocStream.passageHitsAgainstIndex(
-      stream, index, "doc_id", "text", passageLen = Q84PassageLen)
-    val qname = s"q103_ph_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val query = hits.writeStream.format("memory").queryName(qname)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    finishStream(ss, qname)(_
+    StagedStream.toMemory(s, "q103_ph", stage, maxFilesPerTrigger = 2,
+        outputMode = "append")((_, in) =>
+      graft.streaming.DocStream.passageHitsAgainstIndex(
+        in, index, "doc_id", "text", passageLen = Q84PassageLen))(_
       .select(col("incoming_id"), col("slot"), col("digest"),
         col("corpus_df"))
       .orderBy(col("incoming_id"), col("slot")))
@@ -2508,7 +2369,6 @@ object Curation {
     * digest-keyed and bounded by rate × horizon — the 100 TB/day
     * contract in the operator's scaladoc. */
   def q113StreamExactDedup(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val docs = Tables.documents(s, dir).select(col("doc_id"), col("text"))
     val stage = stagedArrival(s, "stage-q113", dir, "documents.parquet") {
       d =>
@@ -2531,24 +2391,16 @@ object Curation {
           f.setLastModified(t0 + i * 2000L)
         }
     }
-    val ss = streamSession(s)
-    val sch = ss.read.parquet(stage).schema
-    val stream = ss.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 1).parquet(stage)
-    val deduped = graft.streaming.EventStream.dedupWithinWatermark(
-      stream
-        // +1 h offset: the INITIAL watermark is epoch 0 and the late
-        // filter drops ts <= watermark, so a doc_id-0 row timed at
-        // exactly epoch 0 would be discarded before dedup ever saw it
-        .withColumn("ts", timestamp_seconds(col("doc_id") * 60 + 3600))
-        .withColumn("digest", md5(col("text"))),
-      keyCols = Seq("digest"), horizon = "3650 days")
-    val qname =
-      s"q113_dd_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val query = deduped.writeStream.format("memory").queryName(qname)
-      .outputMode("append").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    finishStream(ss, qname)(_
+    StagedStream.toMemory(s, "q113_dd", stage, maxFilesPerTrigger = 1,
+        outputMode = "append")((_, in) =>
+      graft.streaming.EventStream.dedupWithinWatermark(
+        in
+          // +1 h offset: the INITIAL watermark is epoch 0 and the late
+          // filter drops ts <= watermark, so a doc_id-0 row timed at
+          // exactly epoch 0 would be discarded before dedup ever saw it
+          .withColumn("ts", timestamp_seconds(col("doc_id") * 60 + 3600))
+          .withColumn("digest", md5(col("text"))),
+        keyCols = Seq("digest"), horizon = "3650 days"))(_
       .select(col("digest"), col("doc_id"))
       .orderBy(col("digest")))
   }
@@ -2564,23 +2416,14 @@ object Curation {
     * last ulp and no arrival-order staging is needed (plain
     * repartition, unlike q101's keyed state). */
   def q118StreamHourlyCounts(s: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.streaming.Trigger
     val ev = Tables.events(s, dir)
       .select(col("ts"), col("event_type"), col("value"))
     val stage = stagedArrival(s, "stage-q118", dir, "events.parquet") {
       d => ev.repartition(4).write.mode("overwrite").parquet(d)
     }
-    val ss = streamSession(s)
-    val sch = ss.read.parquet(stage).schema
-    val stream = ss.readStream.schema(sch)
-      .option("maxFilesPerTrigger", 2).parquet(stage)
-    val agg = graft.streaming.EventStream.hourlyCounts(stream)
-    val qname =
-      s"q118_hr_${java.util.UUID.randomUUID().toString.replace("-", "")}"
-    val query = agg.writeStream.format("memory").queryName(qname)
-      .outputMode("complete").trigger(Trigger.AvailableNow()).start()
-    query.awaitTermination()
-    finishStream(ss, qname)(_
+    StagedStream.toMemory(s, "q118_hr", stage, maxFilesPerTrigger = 2,
+        outputMode = "complete")((_, in) =>
+      graft.streaming.EventStream.hourlyCounts(in))(_
       .select(col("hr").cast("long").as("hr_s"), col("event_type"),
         col("n"), col("total"))
       .orderBy(col("hr_s"), col("event_type")))

@@ -37,23 +37,31 @@ object Hierarchy {
       .localCheckpoint(eager = true)
     val base = e.select(col("parent").as("ancestor"),
       col("child").as("descendant"), lit(1).as("depth"))
-    var acc = base
-    var frontier = base
-    var depth = 1
+    // the base is depth 1, so maxDepth allows maxDepth - 1 extensions
+    frontierWalk(base, maxDepth - 1)(_.alias("f")
+      .join(broadcast(e.alias("e")), col("f.descendant") === col("e.parent"))
+      .select(col("f.ancestor").as("ancestor"),
+        col("e.child").as("descendant"),
+        (col("f.depth") + 1).as("depth")))
+  }
+
+  /** Semi-naive frontier walk: `seed` plus every non-empty level
+    * `step` derives from the previous level, for at most `maxSteps`
+    * steps. Each level is localCheckpoint'ed (severing the lineage,
+    * which would otherwise double per level) and probed for emptiness
+    * ONCE on the materialized frontier; the walk stops at the first
+    * empty level. */
+  def frontierWalk(seed: DataFrame, maxSteps: Int)(
+      step: DataFrame => DataFrame): DataFrame = {
+    var acc = seed
+    var frontier = seed
+    var steps = 0
     var drained = false
-    while (depth < maxDepth && !drained) {
-      val next = frontier.alias("f")
-        .join(broadcast(e.alias("e")), col("f.descendant") === col("e.parent"))
-        .select(col("f.ancestor").as("ancestor"),
-          col("e.child").as("descendant"),
-          (col("f.depth") + 1).as("depth"))
-        .localCheckpoint(eager = true)
-      // ONE emptiness probe per level on the already-materialized
-      // frontier (the old loop asked twice: once to extend acc, once
-      // again at the loop head — a redundant action per level)
+    while (steps < maxSteps && !drained) {
+      val next = step(frontier).localCheckpoint(eager = true)
       drained = next.isEmpty
       if (!drained) { acc = acc.unionByName(next); frontier = next }
-      depth += 1
+      steps += 1
     }
     acc
   }

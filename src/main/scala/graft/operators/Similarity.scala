@@ -103,54 +103,6 @@ object Similarity {
       .filter(col("rank") <= k)
   }
 
-  /** Deterministic pseudo-random hyperplane component for (plane j,
-    * dim i): xxhash64 mapped to [-1, 1]. No RNG — reproducible across
-    * runs and engines. */
-  private def planeComponent(j: Int, i: Column): Column =
-    (xxhash64(lit(j), i).cast("double") / lit(Long.MaxValue.toDouble))
-
-  /** Sign-pattern LSH key over `planes` random hyperplanes, grouped
-    * into one bucket id.
-    *
-    * HOF-REFERENCE (not on any query path): [[lshKey]] and
-    * [[saltedLshKeys]] are the pure-built-in (HOF) formulations, kept
-    * as the engine-portable reference; every shipped query path uses
-    * the fused native kernel
-    * ([[graft.functions.VectorExpressions.lshSignKeys]], ~2× faster,
-    * different but equally-deterministic plane derivation). The
-    * literal marker is the repo convention (README §Scale design):
-    * `grep -rn "HOF-REFERENCE" src/main` lists every
-    * documentation-only twin, so a hot-path audit can skip them
-    * mechanically. */
-  def lshKey(vec: Column, planes: Int): Column =
-    (0 until planes).map { j =>
-      when(aggregate(
-        zip_with(vec, sequence(lit(0), size(vec) - 1),
-          (x, i) => x.cast("double") * planeComponent(j, i)),
-        lit(0.0), (acc, v) => acc + v) >= 0, lit(1L << j)).otherwise(lit(0L))
-    }.reduce(_ bitwiseOR _)
-
-  /** Table-salted LSH bucket keys: `tables` independent sign-pattern
-    * keys of `planes` hyperplanes each (table id folded into both the
-    * plane index base and the key's high bits).
-    * HOF-REFERENCE (not on any query path) — see [[lshKey]].
-    * The recall/cost dial:
-    * a pair at cosine τ shares one table's key with probability
-    * p = (1 − arccos(τ)/π)^planes and is missed everywhere with
-    * (1 − p)^tables — low-τ regimes need few planes and many tables,
-    * high-τ near-dup regimes prune hard with more planes. */
-  def saltedLshKeys(vec: Column, planes: Int, tables: Int): Column =
-    array((0 until tables).map { t =>
-      (0 until planes).map { j =>
-        when(aggregate(
-          zip_with(vec, sequence(lit(0), size(vec) - 1),
-            (x, i) => x.cast("double") *
-              planeComponent(t * planes + j, i)),
-          lit(0.0), (acc, v) => acc + v) >= 0,
-          lit(1L << j)).otherwise(lit(0L))
-      }.reduce(_ bitwiseOR _) + lit(t.toLong << 32)
-    }: _*)
-
   /** Approximate top-k: queries meet only corpus vectors sharing one
     * of `tables` LSH bucket keys; exact cosine on the candidates.
     * Recall < 1 by construction; raise `tables`/lower `planes` to
@@ -624,15 +576,6 @@ object Similarity {
   }
 
   // ── product quantization (q130) ────────────────────────────────────
-
-  /** Squared L2 between two float arrays — the PQ assignment metric
-    * (codebooks minimize reconstruction error, not angle). Native
-    * fused kernel ([[graft.functions.VectorExpressions.l2Squared]]):
-    * training evaluates this corpus × m × ks times per Lloyd round,
-    * the volume where interpreted HOF lambda machinery dominates
-    * (q131's clustered build measured the cost). */
-  private def l2sq(a: Column, b: Column): Column =
-    graft.functions.VectorExpressions.l2Squared(a, b)
 
   /** (id, s, sv): every vector exploded into its `m` subvectors. */
   private def subvectors(c: DataFrame, m: Int, subDim: Int): DataFrame =

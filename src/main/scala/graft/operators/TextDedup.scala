@@ -271,7 +271,6 @@ object TextDedup {
       minJaccard: Double = 0.8,
       maxBucketSize: Long = 100000,
       materializeGrams: Boolean = true): DataFrame = {
-    val rowsPerBand = numHashes / bands
     // exploded-gram formulation: one (id, gramHash) row per distinct
     // shingle, then numHashes min-aggregations — all inside hash-agg
     // codegen with map-side partial mins, no per-lane array
@@ -1089,14 +1088,6 @@ object TextDedup {
     val drops = dropSet(pairs).withColumnRenamed("id", idCol)
     exactKept.join(drops, Seq(idCol), "left_anti")
   }
-
-  /** Exact Jaccard for given candidate pairs (semi-join restricted
-    * gram join — cheap post-LSH). */
-  def verifyJaccard(docs: DataFrame, cand: DataFrame,
-      idCol: String, textCol: String, n: Int,
-      minJaccard: Double): DataFrame =
-    verifyJaccardFromGrams(
-      explodedShingles(docs, idCol, textCol, n), cand, minJaccard)
 
   /** Exact Jaccard verification from an EXISTING (id, g) gram table.
     * Verification semi-joins the grams down to candidate ids, computes

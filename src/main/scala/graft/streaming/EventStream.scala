@@ -2,7 +2,7 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Structured-Streaming surface: the streaming twins of the batch
   * event queries (SURVEY §2 "continuous" + the training-pipeline
@@ -24,27 +24,6 @@ object EventStream {
   final case class SessionSummary(user_id: Long, n_events: Long,
       total_value: Double, started: java.sql.Timestamp,
       ended: java.sql.Timestamp)
-
-  /** Read the events table as a file stream (schema fixed up the same
-    * way [[graft.Tables.events]] does for nanos timestamps). */
-  def readEvents(spark: SparkSession, dir: String): DataFrame = {
-    val batchSchema = spark.read.parquet(s"$dir/events.parquet").schema
-    // the file stream source needs a directory: stream the sf dir with
-    // a glob filter selecting just the events table
-    val raw = spark.readStream.schema(batchSchema)
-      .option("pathGlobFilter", "events.parquet")
-      .parquet(dir)
-    raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType => // nanos-as-long legacy
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        // UTC session ⇒ wall-clock-identity cast; keeps the typed
-        // Event encoder (java.sql.Timestamp ⇒ TimestampType) resolvable
-        raw.withColumn("ts",
-          col("ts").cast(org.apache.spark.sql.types.TimestampType))
-      case _ => raw
-    }
-  }
 
   /** Watermarked tumbling-window aggregation — the streaming twin of
     * Reports.q18EventsHourly. The value sum accumulates in
@@ -165,18 +144,5 @@ object EventStream {
             out.reverseIterator
           }
       }
-  }
-
-  /** Drive a streaming DataFrame to a memory sink synchronously —
-    * AvailableNow processes the whole backlog and stops (the local
-    * smoke harness, and how tests observe results). */
-  def runToMemory(df: DataFrame, name: String,
-      outputMode: String = "append",
-      timeoutMs: Long = 120000): StreamingQuery = {
-    val q = df.writeStream.format("memory").queryName(name)
-      .outputMode(outputMode)
-      .trigger(Trigger.AvailableNow()).start()
-    q.awaitTermination(timeoutMs)
-    q
   }
 }

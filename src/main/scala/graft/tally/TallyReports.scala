@@ -1,5 +1,6 @@
 package graft.tally
 
+import graft.operators.Hierarchy
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -202,23 +203,13 @@ object TallyReports {
     // walk; the loop then joins cached blocks (guide §2.4/§5)
     val g = t.mstGroup.select(col("name"), col("parent"))
       .localCheckpoint(eager = true)
-    var acc = g.filter(col("name") === group)
-    var frontier = acc
-    var depth = 0
-    var drained = false
-    while (depth < 500 && !drained) {
-      val next = (if (downward)
-        g.as("e").join(frontier.as("f"), col("e.parent") === col("f.name"))
+    Hierarchy.frontierWalk(g.filter(col("name") === group), 500)(f =>
+      (if (downward)
+        g.as("e").join(f.as("f"), col("e.parent") === col("f.name"))
       else
-        g.as("e").join(frontier.as("f"), col("e.name") === col("f.parent")))
-        .select(col("e.name").as("name"), col("e.parent").as("parent"))
-        .localCheckpoint(eager = true)
-      // one emptiness probe per level (was two: loop head + extend)
-      drained = next.isEmpty
-      if (!drained) { acc = acc.unionByName(next); frontier = next }
-      depth += 1
-    }
-    acc.orderBy(col("name"))
+        g.as("e").join(f.as("f"), col("e.name") === col("f.parent")))
+        .select(col("e.name").as("name"), col("e.parent").as("parent")))
+      .orderBy(col("name"))
   }
 
   // ── profit-loss.sql ────────────────────────────────────────────────

@@ -1,6 +1,6 @@
 package graft
 
-import graft.streaming.EventStream
+import graft.streaming.{EventStream, StagedStream}
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -8,39 +8,45 @@ class EventStreamSpec extends AnyFunSuite {
   lazy val spark = SparkTestSession.spark
   val sf = SparkTestSession.sf
 
+  /** The events table staged as ONE arrival file: a single data
+    * micro-batch, so no row arrives behind an earlier batch's
+    * watermark. */
+  lazy val stagedEvents: String = {
+    val d = java.nio.file.Files.createTempDirectory("events-stage-")
+      .resolve("events").toString
+    Tables.events(spark, sf).coalesce(1).write.parquet(d)
+    d
+  }
+
   test("streaming hourly counts match the batch aggregation") {
-    val stream = EventStream.readEvents(spark, sf)
-    val q = EventStream.runToMemory(
-      EventStream.hourlyCounts(stream), "hourly", outputMode = "append")
-    try {
-      // append mode emits only watermark-closed windows; compare those
-      // against the batch result restricted to the same windows
-      val streamed = spark.table("hourly")
-      val batch = Tables.events(spark, sf)
-        .groupBy(date_trunc("hour", col("ts")).as("hr"), col("event_type"))
-        .agg(count(lit(1)).as("n"))
-      val joined = streamed.as("s").join(batch.as("b"),
-        col("s.hr") === col("b.hr") &&
-          col("s.event_type") === col("b.event_type"))
-      assert(joined.filter(col("s.n") =!= col("b.n")).count() == 0)
-    } finally q.stop()
+    // append mode emits only watermark-closed windows (the no-data
+    // batch after the data batch closes them); compare those against
+    // the batch result restricted to the same windows
+    val streamed = StagedStream.toMemory(spark, "hourly", stagedEvents,
+        maxFilesPerTrigger = 1, outputMode = "append",
+        noDataBatches = true)((_, in) =>
+      EventStream.hourlyCounts(in))(identity)
+    val batch = Tables.events(spark, sf)
+      .groupBy(date_trunc("hour", col("ts")).as("hr"), col("event_type"))
+      .agg(count(lit(1)).as("n"))
+    val joined = streamed.as("s").join(batch.as("b"),
+      col("s.hr") === col("b.hr") &&
+        col("s.event_type") === col("b.event_type"))
+    assert(joined.count() > 0)
+    assert(joined.filter(col("s.n") =!= col("b.n")).count() == 0)
   }
 
   test("streaming dedup drops in-horizon duplicate keys") {
     // duplicate every event id by unioning the stream with itself:
     // post-dedup, each id must appear exactly once
-    val stream = EventStream.readEvents(spark, sf)
-    val doubled = stream.unionByName(stream)
-    val q = EventStream.runToMemory(
-      EventStream.dedupWithinWatermark(doubled, Seq("event_id")),
-      "dedup_stream")
-    try {
-      val total = Tables.events(spark, sf).count()
-      val out = spark.table("dedup_stream")
-      assert(out.count() == total)
-      assert(out.groupBy(col("event_id")).count()
-        .filter(col("count") > 1).count() == 0)
-    } finally q.stop()
+    val out = StagedStream.toMemory(spark, "dedup_stream", stagedEvents,
+        maxFilesPerTrigger = 1, outputMode = "append")((_, in) =>
+      EventStream.dedupWithinWatermark(in.unionByName(in),
+        Seq("event_id")))(identity)
+    val total = Tables.events(spark, sf).count()
+    assert(out.count() == total)
+    assert(out.groupBy(col("event_id")).count()
+      .filter(col("count") > 1).count() == 0)
   }
 
   test("streaming sessionization equals the batch twin (q60 semantics)") {
@@ -103,19 +109,17 @@ class EventStreamSpec extends AnyFunSuite {
   }
 
   test("sessionization produces plausible keyed-state summaries") {
-    val stream = EventStream.readEvents(spark, sf)
-    val sessions = EventStream.sessionize(spark, stream, gapMinutes = 30)
-    val q = EventStream.runToMemory(sessions.toDF(), "sessions")
-    try {
-      // sessions emit on state timeout; with one synchronous batch the
-      // in-flight sessions are still open — emitted set may be small,
-      // but any emitted session must be internally consistent
-      val rows = spark.table("sessions").collect()
-      rows.foreach { r =>
-        assert(r.getAs[Long]("n_events") >= 1)
-        assert(!r.getAs[java.sql.Timestamp]("ended")
-          .before(r.getAs[java.sql.Timestamp]("started")))
-      }
-    } finally q.stop()
+    // sessions emit on state timeout; with one synchronous batch the
+    // in-flight sessions are still open — emitted set may be small,
+    // but any emitted session must be internally consistent
+    val rows = StagedStream.toMemory(spark, "sessions", stagedEvents,
+        maxFilesPerTrigger = 1, outputMode = "append")((ss, in) =>
+      EventStream.sessionize(ss, in, gapMinutes = 30).toDF())(identity)
+      .collect()
+    rows.foreach { r =>
+      assert(r.getAs[Long]("n_events") >= 1)
+      assert(!r.getAs[java.sql.Timestamp]("ended")
+        .before(r.getAs[java.sql.Timestamp]("started")))
+    }
   }
 }
