@@ -231,7 +231,10 @@ object LinkGraph {
     * PREVIOUS round's total mass — a bound that holds only on SIMPLE
     * graphs, so edges are deduplicated at intake (parallel edges
     * collapse; unbounded multigraph fan-in could otherwise push one
-    * raw score past the margin and wrap silently).
+    * raw score past the margin and wrap silently). Edges with an
+    * endpoint outside `nodes` are dropped at intake too: an unknown
+    * id would hold hub or authority mass that no node reports, and
+    * its share would still count in every rescale's total.
     *
     * Scale shape: two shuffles per round (authorities group by dst,
     * hubs group by src — a deployment buckets the edge table by each
@@ -247,14 +250,29 @@ object LinkGraph {
       .localCheckpoint(true)
     val n = if (nodeCountHint > 0) nodeCountHint else nodeIds.count()
     require(n > 0, "hitsFixed needs a nonempty node set")
+    // each edge's two endpoints become rows (`pos` 0 and 1) that
+    // ONE semi-join checks against the node set: a semi-join per
+    // endpoint column broadcasts the node set twice, and once per
+    // branch of a union-built edge law. An edge keeps both positions
+    // exactly when both endpoints are nodes; the group-by that checks
+    // it also collapses parallel edges
     val e = edges.select(col("src").cast("long").as("src"),
-      col("dst").cast("long").as("dst")).distinct().localCheckpoint(true)
+        col("dst").cast("long").as("dst"))
+      .select(col("src"), col("dst"),
+        posexplode(array(col("src"), col("dst"))).as(Seq("pos", "id")))
+      .join(nodeIds, Seq("id"), "left_semi")
+      .groupBy(col("src"), col("dst"))
+      .agg((min(col("pos")) < max(col("pos"))).as("closed"))
+      .filter(col("closed")).select(col("src"), col("dst"))
+      .localCheckpoint(true)
     // rescale LAZILY over the checkpointed raw frame — no spine join,
     // no extra materialization per half-round. Only ids that received
-    // mass appear; an absent id's score is 0, and a zero score
-    // contributes nothing to the next half-round's integer sums, so
-    // the slim frame feeds the loop with values identical to the old
-    // spine-complete one (the zeros are re-attached once, at the end).
+    // mass appear, and every one of them is a node because `e` holds
+    // only edges between nodes; an absent node's score is 0, and a
+    // zero score contributes nothing to the next half-round's integer
+    // sums, so the slim frame feeds the loop with the values a
+    // spine-complete frame would (the zeros are re-attached once, at
+    // the end).
     // Old shape: spine join + localCheckpoint per half-round = 2 extra
     // jobs per round that moved no information the next join needed.
     def rescaleSlim(raw: DataFrame, total: Long, out: String): DataFrame =
@@ -268,8 +286,8 @@ object LinkGraph {
         "from the edge set; check the edge law")
       s
     }
+    // a projection of the checkpointed node ids: nothing to materialize
     var hubs = nodeIds.select(col("id"), lit(mass / n).as("h"))
-      .localCheckpoint(true)
     var auths: DataFrame = nodeIds.select(col("id"), lit(0L).as("a"))
     for (_ <- 1 to iterations) {
       val araw = hubs.join(e, hubs("id") === e("src"))

@@ -18,7 +18,10 @@ trait Warehouse {
     * write-back. `transform` must be row-local and identity on
     * unaffected rows (anti-join delete, union-append, join-refresh all
     * are), so the default full-table rewrite is always correct and
-    * partitioned backends can rewrite only the affected slice. */
+    * partitioned backends can rewrite only the affected slice. A
+    * composition of such transforms, passed with the union of their
+    * key sets, meets the same contract: the merge stages its steps'
+    * write-backs and hands each table over in one call. */
   def rewritePartitions(table: String, keys: DataFrame,
       transform: DataFrame => DataFrame): Unit =
     write(table, transform(read(table)))
@@ -59,6 +62,11 @@ final class ParquetWarehouse(spark: SparkSession, dir: String) extends Warehouse
   * semantics"; a full sync still rewrites whole tables through
   * [[write]]). Tables lacking the key column (pure dims like
   * mst_vouchertype) store unpartitioned and fall back to full rewrite.
+  * Both [[write]] and [[rewritePartitions]] exchange rows on the
+  * bucket id before the partitioned write, so every `_pt=<bucket>`
+  * directory holds exactly one parquet file: a rewrite replaces one
+  * file per touched bucket, and the retained predecessor version
+  * shares every other file by hard link.
   *
   * Concurrency contract: SINGLE WRITER, CONCURRENT READERS SAFE.
   * Every commit is snapshot-isolated: data lives in immutable version
@@ -149,13 +157,17 @@ final class PartitionedParquetWarehouse(spark: SparkSession, dir: String,
     }
   }
 
+  /** One exchange on the bucket id, so each bucket is one task and
+    * comes out as one file. */
+  private def writeBuckets(df: DataFrame, out: String): Unit =
+    df.withColumn(PtCol, pt(col(keyCol))).repartition(col(PtCol))
+      .write.mode("overwrite").partitionBy(PtCol).parquet(out)
+
   def write(table: String, df: DataFrame): Unit = {
     tableDir(table).mkdirs()
     val v = nextVersion(table)
     val out = new java.io.File(tableDir(table), v).getPath
-    if (df.columns.contains(keyCol))
-      df.withColumn(PtCol, pt(col(keyCol)))
-        .write.mode("overwrite").partitionBy(PtCol).parquet(out)
+    if (df.columns.contains(keyCol)) writeBuckets(df, out)
     else df.write.mode("overwrite").parquet(out)
     publish(table, v)
   }
@@ -184,9 +196,7 @@ final class PartitionedParquetWarehouse(spark: SparkSession, dir: String,
     // output partition is one of `pts`; a partition emptied by the
     // transform simply never appears. Source files are immutable, so
     // no pre-write materialization is needed.
-    transform(affected)
-      .withColumn(PtCol, pt(col(keyCol)))
-      .write.mode("overwrite").partitionBy(PtCol).parquet(newDir.getPath)
+    writeBuckets(transform(affected), newDir.getPath)
     // stage 2: carry untouched partitions over as hard links
     Option(new java.io.File(curPath).listFiles()).getOrElse(Array.empty)
       .filter(f => f.isDirectory && f.getName.startsWith(s"$PtCol=") &&
@@ -231,7 +241,7 @@ final case class SyncReport(
     renumbered: Boolean)
 
 /** The incremental-sync merge (SURVEY §2.3 L1–L11; reference
-  * src/tally.mts:88-307) as one Spark job per changed table group:
+  * src/tally.mts:88-307), one tick per [[run]]:
   *
   *  1. watermark compare gates the whole sync (L1/L2)
   *  2. per primary table: (guid, alterid) diff → deleted keys
@@ -245,14 +255,27 @@ final case class SyncReport(
   *  5. voucher renumbering when any voucher type is auto-numbered
   *     (L10): join-replace `voucher_number` from the re-pull
   *
-  * Every step is a key-partitioned join — with warehouse tables
-  * bucketed by guid the whole merge is one shuffle per table at most;
-  * diff snapshots are small (two columns) and broadcast. Every
-  * write-back goes through [[Warehouse.rewritePartitions]] with the
-  * affected key set, so a partition-capable warehouse
-  * ([[PartitionedParquetWarehouse]]) replaces only the partitions a
-  * sync actually touches — at 100 TB an incremental sync's I/O scales
-  * with the CHANGE volume, not the table volume.
+  * The steps do not write. Each one STAGES its write-back — the key
+  * set it touches and a row-local transform — on a per-tick view
+  * ([[TickView]]) that reads every table once and composes the staged
+  * transforms on top, so each step sees the state the steps before it
+  * left. Each table is then rewritten once, through
+  * [[Warehouse.rewritePartitions]] with the union of its staged keys
+  * and the composed transform. Masters are published when the master
+  * group ends, because the transaction group's surrogate-FK lookups
+  * and the cascade updates read them again; transaction tables are
+  * published when the tick ends, so a tick that fails before then
+  * leaves them untouched. A delete or append step that found no rows
+  * stages nothing.
+  *
+  * The diff snapshots, the re-pull and the master lookups are small
+  * and broadcast. The merge is not shuffle-free: the removed keys and
+  * each rewrite's bucket ids are distinct aggregates, and each rewrite
+  * exchanges its rows on the bucket id so every bucket is written as
+  * one file. A partition-capable warehouse
+  * ([[PartitionedParquetWarehouse]]) replaces only the buckets a tick
+  * actually touches, so a tick's I/O scales with the CHANGE volume,
+  * not the table volume.
   */
 final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
     transactions: Seq[TableSpec], source: TallySource,
@@ -262,17 +285,18 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
   private val versionCol = "alterid"
 
   def run(): SyncReport = {
+    val view = new TickView(warehouse)
     val primaryMasters = masters.filter(_.nature == "Primary")
       .filter(s => warehouse.exists(s.name))
     val dbMasterWm =
       if (primaryMasters.isEmpty) 0L
       else Cdc.maxWatermark(
-        primaryMasters.map(s => warehouse.read(s.name)), versionCol)
+        primaryMasters.map(s => view.read(s.name)), versionCol)
     // the reference anchors the transaction watermark on trn_voucher
     // (src/tally.mts:124); fall back to 0 on a first/masters-only run
     val dbTxnWm =
       if (warehouse.exists("trn_voucher"))
-        Cdc.maxWatermark(Seq(warehouse.read("trn_voucher")), versionCol)
+        Cdc.maxWatermark(Seq(view.read("trn_voucher")), versionCol)
       else 0L
 
     val masterChanged = source.lastAlterIdMaster != dbMasterWm
@@ -287,7 +311,7 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
     def mergeGroup(specs: Seq[TableSpec], wm: Long): Unit = {
       // delete phase: primary tables detect deletes/changes via diff
       specs.filter(_.nature == "Primary").foreach { spec =>
-        val target = warehouse.read(spec.name)
+        val target = view.read(spec.name)
         val diff = broadcast(source.diffSnapshot(spec))
         val deletedKeys = target.join(diff, Seq(keyCol), "left_anti")
           .select(col(keyCol))
@@ -298,21 +322,23 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
         val removeKeys = deletedKeys.union(changedKeys).distinct()
           .localCheckpoint(eager = true)
         deleted(spec.name) = removeKeys.count()
-        warehouse.rewritePartitions(spec.name, removeKeys,
-          df => df.join(removeKeys, Seq(keyCol), "left_anti"))
-        // cascade delete to children via their FK column (L7). The
-        // child partitions by its OWN key, so the affected set is the
-        // keys of rows whose FK matches — a read to find them is far
-        // cheaper than rewriting every partition
-        spec.cascadeDelete.foreach { cas =>
-          cas.fields.values.foreach { fk =>
-            if (warehouse.exists(cas.table)) {
-              val affected = warehouse.read(cas.table)
-                .join(removeKeys.withColumnRenamed(keyCol, fk), Seq(fk),
-                  "left_semi")
-                .select(col(keyCol))
-              warehouse.rewritePartitions(cas.table, affected,
-                df => Cdc.cascadeDelete(df, removeKeys, fk))
+        if (deleted(spec.name) > 0) {
+          view.stage(spec.name, removeKeys,
+            df => df.join(removeKeys, Seq(keyCol), "left_anti"))
+          // cascade delete to children via their FK column (L7). The
+          // child partitions by its OWN key, so the affected set is the
+          // keys of rows whose FK matches — a read to find them is far
+          // cheaper than rewriting every partition
+          spec.cascadeDelete.foreach { cas =>
+            cas.fields.values.foreach { fk =>
+              if (warehouse.exists(cas.table)) {
+                val affected = view.read(cas.table)
+                  .join(removeKeys.withColumnRenamed(keyCol, fk), Seq(fk),
+                    "left_semi")
+                  .select(col(keyCol))
+                view.stage(cas.table, affected,
+                  df => Cdc.cascadeDelete(df, removeKeys, fk))
+              }
             }
           }
         }
@@ -327,18 +353,27 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
       specs.foreach { spec =>
         val fresh = graft.operators.SurrogateFk.enrich(
             source.incrementalRows(spec, wm), spec,
-            t => if (warehouse.exists(t)) Some(warehouse.read(t)) else None)
+            t => if (warehouse.exists(t)) Some(view.read(t)) else None)
           .localCheckpoint(eager = true)
         appended(spec.name) = fresh.count()
-        val base = warehouse.read(spec.name)
-        val aligned = fresh.select(base.columns.map(col).toIndexedSeq: _*)
-        warehouse.rewritePartitions(spec.name, fresh.select(col(keyCol)),
-          df => df.unionByName(aligned.select(
-            df.columns.map(col).toIndexedSeq: _*)))
+        if (appended(spec.name) > 0) {
+          val base = view.read(spec.name)
+          val aligned = fresh.select(base.columns.map(col).toIndexedSeq: _*)
+          view.stage(spec.name, fresh.select(col(keyCol)),
+            df => df.unionByName(aligned.select(
+              df.columns.map(col).toIndexedSeq: _*)))
+        }
       }
     }
 
-    if (masterChanged) mergeGroup(masters, dbMasterWm)
+    // masters publish before the transaction group: its surrogate-FK
+    // lookups and the cascade updates below read them again, and a
+    // published master is a plain file scan rather than a stack of
+    // staged joins
+    if (masterChanged) {
+      mergeGroup(masters, dbMasterWm)
+      view.flush(masters.map(_.name))
+    }
     if (txnChanged) mergeGroup(transactions, dbTxnWm)
 
     // cascade updates: refresh denormalized names from masters (L9).
@@ -350,8 +385,8 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
         spec.cascadeUpdate.foreach { cas =>
           cas.fields.foreach { case (field, _) =>
             if (warehouse.exists(cas.table)) {
-              val m = warehouse.read(spec.name)
-              val stale = warehouse.read(cas.table).as("c")
+              val m = view.read(spec.name)
+              val stale = view.read(cas.table).as("c")
                 .join(broadcast(m.select(col(keyCol).as("__mk"),
                   col("name").as("__mn"))),
                   col(s"c._$field") === col("__mk"))
@@ -359,7 +394,7 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
                 // would silently skip it forever
                 .filter(!(col(s"c.$field") <=> col("__mn")))
                 .select(col(s"c.$keyCol").as(keyCol))
-              warehouse.rewritePartitions(cas.table, stale,
+              view.stage(cas.table, stale,
                 df => Cdc.cascadeUpdate(df, m, s"_$field", keyCol,
                   "name", field))
             }
@@ -371,28 +406,71 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
     // later vouchers when one is inserted in between
     var renumbered = false
     if (txnChanged && warehouse.exists("mst_vouchertype")) {
-      val autoCount = warehouse.read("mst_vouchertype")
+      val autoCount = view.read("mst_vouchertype")
         .filter(col("numbering_method").contains("Auto")).limit(1).count()
       if (autoCount > 0) {
         val numbers = source.voucherNumbers()
         // only vouchers whose number actually shifted need a rewrite
         // (null-safe: a NULL stored number re-pulled non-NULL is a
         // shift too)
-        val changed = warehouse.read("trn_voucher")
+        val changed = view.read("trn_voucher")
           .join(broadcast(numbers
             .withColumnRenamed("voucher_number", "__vn")),
             Seq(keyCol), "inner")
           .filter(!(col("voucher_number") <=> col("__vn")))
           .select(col(keyCol))
-        warehouse.rewritePartitions("trn_voucher", changed,
+        view.stage("trn_voucher", changed,
           df => Cdc.renumber(df, numbers, keyCol, "voucher_number"))
         renumbered = true
       }
     }
 
+    // the transaction tables publish only now: a tick that fails
+    // before this point leaves them as they were
+    view.flushAll()
     SyncReport(masterChanged, txnChanged, deleted.toMap, appended.toMap,
       renumbered)
   }
+}
+
+/** One merge tick's view of the warehouse: each table is read once,
+  * and the write-backs the steps stage are composed on top of that
+  * read, so every step sees the state the steps before it left.
+  * [[flush]] publishes a table with ONE [[Warehouse.rewritePartitions]]
+  * call over the union of its staged key sets and the composition of
+  * its staged transforms. Each staged transform is row-local and
+  * identity outside its own keys, so the composition is too, with the
+  * union as its key set. */
+private final class TickView(warehouse: Warehouse) {
+  private val bases = scala.collection.mutable.Map[String, DataFrame]()
+  // per table: the staged key sets and the composed transform
+  private val pending = scala.collection.mutable
+    .LinkedHashMap[String, (List[DataFrame], DataFrame => DataFrame)]()
+
+  private def base(table: String): DataFrame =
+    bases.getOrElseUpdate(table, warehouse.read(table))
+
+  def read(table: String): DataFrame =
+    pending.get(table).fold(base(table))(_._2(base(table)))
+
+  def stage(table: String, keys: DataFrame,
+      transform: DataFrame => DataFrame): Unit =
+    pending(table) = pending.get(table) match {
+      case Some((staged, composed)) =>
+        (keys :: staged, composed.andThen(transform))
+      case None => (List(keys), transform)
+    }
+
+  /** Publish the staged write-backs of `tables`; a later [[read]] of
+    * one of them reads the published version. */
+  def flush(tables: Seq[String]): Unit = tables.foreach { t =>
+    pending.remove(t).foreach { case (keys, transform) =>
+      warehouse.rewritePartitions(t, keys.reduce(_ union _), transform)
+      bases.remove(t)
+    }
+  }
+
+  def flushAll(): Unit = flush(pending.keys.toList)
 }
 
 /** Continuous sync (SURVEY §2.3 L13; reference src/index.mts:51-89):

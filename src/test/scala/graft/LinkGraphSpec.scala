@@ -42,6 +42,47 @@ class LinkGraphSpec extends AnyFunSuite {
     assert(r.getLong(2) == n)
   }
 
+  /** hitsFixed's rounds on driver-side maps: hubs start at
+    * `mass div n`, each half-step sums over the simple edge set and
+    * rescales to `raw · mass div Σraw`. `closed` drops the edges with
+    * an endpoint outside `nodes`. */
+  private def hitsReference(nodes: Seq[Long], edges: Seq[(Long, Long)],
+      iterations: Int, mass: Long, closed: Boolean): Seq[(Long, Long, Long)] = {
+    val e = edges.distinct.filter { case (s, d) =>
+      !closed || (nodes.contains(s) && nodes.contains(d)) }
+    def rescale(raw: Map[Long, Long]): Map[Long, Long] = {
+      val total = raw.values.sum
+      raw.map { case (id, v) => id -> v * mass / total }
+    }
+    var hubs = nodes.map(_ -> mass / nodes.size).toMap
+    var auths = Map.empty[Long, Long]
+    (1 to iterations).foreach { _ =>
+      auths = rescale(e.groupBy(_._2).map { case (d, in) =>
+        d -> in.map(x => hubs.getOrElse(x._1, 0L)).sum })
+      hubs = rescale(e.groupBy(_._1).map { case (s, out) =>
+        s -> out.map(x => auths.getOrElse(x._2, 0L)).sum })
+    }
+    nodes.sorted.map(id => (id, auths.getOrElse(id, 0L), hubs.getOrElse(id, 0L)))
+  }
+
+  test("hitsFixed drops edges to ids outside the node set") {
+    // 7 and 9 are not nodes: 1 and 4 link out to them, 9 links in to 3
+    val nodes = Seq(0L, 1L, 2L, 3L, 4L)
+    val edges = Seq((0L, 2L), (0L, 3L), (1L, 2L), (1L, 9L), (1L, 7L),
+      (9L, 3L), (3L, 4L), (4L, 7L), (2L, 4L), (0L, 2L))
+    val m = 1000000000L
+    val want = hitsReference(nodes, edges, 3, m, closed = true)
+    assert(want != hitsReference(nodes, edges, 3, m, closed = false),
+      "fixture: the unknown ids must change the scores")
+    val got = LinkGraph.hitsFixed(edges.toDF("src", "dst"),
+        nodes.toDF("id"), "id", iterations = 3, mass = m)
+      .orderBy($"id").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
+    assert(got == want)
+    // all the mass stays on the nodes, up to the floor remainders
+    assert(got.map(_._2).sum > m - nodes.size && got.map(_._3).sum > m - nodes.size)
+  }
+
   test("hitsFixed collapses parallel edges (simple-graph intake)") {
     // the overflow bound raw ≤ previous total mass holds only on
     // simple graphs; intake dedup makes a multigraph input score

@@ -75,14 +75,32 @@ class MergeJobSpec extends AnyFunSuite {
       v2Vouchers.select($"guid", $"voucher_number")
   }
 
-  private def seededWarehouse(): MemoryWarehouse = {
-    val w = new MemoryWarehouse
+  private def seeded[W <: Warehouse](w: W): W = {
     w.write("mst_ledger", v1Ledgers)
     w.write("trn_voucher", v1Vouchers)
     w.write("trn_accounting", v1Accounting)
     w.write("mst_vouchertype", vtypes)
     w
   }
+
+  private def seededWarehouse(): MemoryWarehouse = seeded(new MemoryWarehouse)
+
+  /** Counts the `rewritePartitions` calls per table; everything else
+    * goes straight to the wrapped warehouse. */
+  private class CountingWarehouse(inner: Warehouse) extends Warehouse {
+    val rewrites = scala.collection.mutable.Map[String, Int]()
+    def read(table: String): DataFrame = inner.read(table)
+    def write(table: String, df: DataFrame): Unit = inner.write(table, df)
+    def exists(table: String): Boolean = inner.exists(table)
+    override def rewritePartitions(table: String, keys: DataFrame,
+        transform: DataFrame => DataFrame): Unit = {
+      rewrites(table) = rewrites.getOrElse(table, 0) + 1
+      inner.rewritePartitions(table, keys, transform)
+    }
+  }
+
+  private def tempDir(prefix: String): String =
+    java.nio.file.Files.createTempDirectory(prefix).toString
 
   private def sorted(df: DataFrame): Seq[String] =
     df.collect().map(_.mkString("|")).sorted.toSeq
@@ -188,6 +206,49 @@ class MergeJobSpec extends AnyFunSuite {
     assert(fks == Map("v1" -> "lg1", "v3" -> "lg4", "v4" -> "lg2"))
     val v4 = w.read("trn_accounting").filter($"guid" === "v4").head()
     assert(v4.getAs[String]("ledger") == "Sales Local")
+  }
+
+  test("a tick rewrites each table once and writes one file per bucket") {
+    // two buckets for three rows per table: every bucket a rewrite
+    // touches mixes rows from several input partitions
+    val partitioned = new PartitionedParquetWarehouse(spark,
+      tempDir("graft-once"), buckets = 2)
+    Seq(seededWarehouse(), seeded(partitioned)).foreach { inner =>
+      val w = new CountingWarehouse(inner)
+      new MergeJob(spark, Seq(ledgerSpec),
+        Seq(voucherSpec, accountingSpec), new V2Source, w).run()
+      assert(w.rewrites.toMap == Map("mst_ledger" -> 1, "trn_voucher" -> 1,
+        "trn_accounting" -> 1), s"rewrites on ${inner.getClass.getSimpleName}")
+      assert(sorted(w.read("mst_ledger")) == sorted(v2Ledgers))
+      assert(sorted(w.read("trn_voucher")) == sorted(v2Vouchers))
+      assert(sorted(w.read("trn_accounting")) == sorted(v2Accounting))
+    }
+    Seq("mst_ledger", "trn_voucher", "trn_accounting").foreach { t =>
+      val buckets = new java.io.File(partitioned.currentPath(t)).listFiles()
+        .filter(f => f.isDirectory && f.getName.startsWith("_pt="))
+      assert(buckets.nonEmpty, s"$t is not bucketed")
+      buckets.foreach { b =>
+        val files = b.listFiles().count(_.getName.endsWith(".parquet"))
+        assert(files == 1, s"$t/${b.getName} holds $files parquet files")
+      }
+    }
+  }
+
+  test("a tick that fails before it ends leaves the transaction tables untouched") {
+    val w = seeded(new PartitionedParquetWarehouse(spark,
+      tempDir("graft-fail"), buckets = 4))
+    val txn = Seq("trn_voucher", "trn_accounting")
+    val before = txn.map(t => t -> (w.currentPath(t), sorted(w.read(t))))
+    // the renumber re-pull is the last source call of a tick, after
+    // every delete, append and cascade step has run
+    val failing = new V2Source {
+      override def voucherNumbers(): DataFrame =
+        throw new IllegalStateException("re-pull failed")
+    }
+    val e = intercept[IllegalStateException](new MergeJob(spark,
+      Seq(ledgerSpec), Seq(voucherSpec, accountingSpec), failing, w).run())
+    assert(e.getMessage == "re-pull failed")
+    assert(txn.map(t => t -> (w.currentPath(t), sorted(w.read(t)))) == before)
   }
 
   test("partitioned warehouse: untouched partitions survive the sync byte-identical") {
