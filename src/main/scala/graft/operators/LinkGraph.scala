@@ -286,7 +286,10 @@ object LinkGraph {
         "from the edge set; check the edge law")
       s
     }
-    // a projection of the checkpointed node ids: nothing to materialize
+    // a projection of the checkpointed node ids: nothing to materialize.
+    // Dropping the checkpoint that stood here saves the one job the
+    // endpoint semi-join above adds, which keeps q149's job count
+    // unchanged (57 at sf0.001) — edit either place and that count moves
     var hubs = nodeIds.select(col("id"), lit(mass / n).as("h"))
     var auths: DataFrame = nodeIds.select(col("id"), lit(0L).as("a"))
     for (_ <- 1 to iterations) {

@@ -66,7 +66,13 @@ final class ParquetWarehouse(spark: SparkSession, dir: String) extends Warehouse
   * bucket id before the partitioned write, so every `_pt=<bucket>`
   * directory holds exactly one parquet file: a rewrite replaces one
   * file per touched bucket, and the retained predecessor version
-  * shares every other file by hard link.
+  * shares every other file by hard link. The price is write
+  * parallelism: each bucket is written by ONE task, so `buckets` caps
+  * the tasks of a full [[write]], and a rewrite runs one task per
+  * touched bucket. The bucket count has to grow with the table (size
+  * it so one bucket is one reasonably sized file, e.g. ~128–512 MB);
+  * at the default 64 buckets the layout suits tables of tens of GB,
+  * not a cluster-scale warehouse.
   *
   * Concurrency contract: SINGLE WRITER, CONCURRENT READERS SAFE.
   * Every commit is snapshot-isolated: data lives in immutable version
@@ -81,10 +87,11 @@ final class ParquetWarehouse(spark: SparkSession, dir: String) extends Warehouse
   * across TWO subsequent commits can lose its files — re-resolve
   * [[read]] per query (the reference's loader has the same contract:
   * its target database snapshots per-statement,
-  * src/database.mts:170-210). On a 1000-executor cluster the same
-  * layout works on any posix-rename DFS; on S3-like stores swap the
-  * pointer file for a small transaction log (what Delta/Iceberg do) —
-  * the reader/writer protocol here is deliberately that shape. */
+  * src/database.mts:170-210). The same version/pointer protocol
+  * works on any posix-rename DFS, with the bucket count sized as
+  * above; on S3-like stores swap the pointer file for a small
+  * transaction log (what Delta/Iceberg do) — the reader/writer
+  * protocol here is deliberately that shape. */
 final class PartitionedParquetWarehouse(spark: SparkSession, dir: String,
     keyCol: String = "guid", buckets: Int = 64,
     retainVersions: Int = 2) extends Warehouse {
@@ -261,11 +268,14 @@ final case class SyncReport(
   * transforms on top, so each step sees the state the steps before it
   * left. Each table is then rewritten once, through
   * [[Warehouse.rewritePartitions]] with the union of its staged keys
-  * and the composed transform. Masters are published when the master
-  * group ends, because the transaction group's surrogate-FK lookups
-  * and the cascade updates read them again; transaction tables are
-  * published when the tick ends, so a tick that fails before then
-  * leaves them untouched. A delete or append step that found no rows
+  * and the composed transform, when the tick ends — masters included:
+  * the transaction group's surrogate-FK lookups and the cascade
+  * updates read the staged masters through the view. A tick that
+  * fails before its flush publishes nothing, and the next tick, seeing
+  * the old watermarks, redoes all of it. The flush itself publishes
+  * table by table, so a failure DURING it can still leave a partial
+  * tick; closing that needs a warehouse-wide commit (one transaction
+  * log over all tables). A delete or append step that found no rows
   * stages nothing.
   *
   * The diff snapshots, the re-pull and the master lookups are small
@@ -366,14 +376,10 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
       }
     }
 
-    // masters publish before the transaction group: its surrogate-FK
-    // lookups and the cascade updates below read them again, and a
-    // published master is a plain file scan rather than a stack of
-    // staged joins
-    if (masterChanged) {
-      mergeGroup(masters, dbMasterWm)
-      view.flush(masters.map(_.name))
-    }
+    // the transaction group's surrogate-FK lookups and the cascade
+    // updates below read the masters through the view, staged steps
+    // included, so the masters need not be published first
+    if (masterChanged) mergeGroup(masters, dbMasterWm)
     if (txnChanged) mergeGroup(transactions, dbTxnWm)
 
     // cascade updates: refresh denormalized names from masters (L9).
@@ -425,8 +431,9 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
       }
     }
 
-    // the transaction tables publish only now: a tick that fails
-    // before this point leaves them as they were
+    // every table publishes only now: a tick that fails before this
+    // point leaves the warehouse as it was, so the next tick sees the
+    // old watermarks and redoes the whole merge
     view.flushAll()
     SyncReport(masterChanged, txnChanged, deleted.toMap, appended.toMap,
       renumbered)
@@ -436,11 +443,11 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
 /** One merge tick's view of the warehouse: each table is read once,
   * and the write-backs the steps stage are composed on top of that
   * read, so every step sees the state the steps before it left.
-  * [[flush]] publishes a table with ONE [[Warehouse.rewritePartitions]]
-  * call over the union of its staged key sets and the composition of
-  * its staged transforms. Each staged transform is row-local and
-  * identity outside its own keys, so the composition is too, with the
-  * union as its key set. */
+  * [[flushAll]] publishes each table with ONE
+  * [[Warehouse.rewritePartitions]] call over the union of its staged
+  * key sets and the composition of its staged transforms. Each
+  * staged transform is row-local and identity outside its own keys,
+  * so the composition is too, with the union as its key set. */
 private final class TickView(warehouse: Warehouse) {
   private val bases = scala.collection.mutable.Map[String, DataFrame]()
   // per table: the staged key sets and the composed transform
@@ -461,16 +468,13 @@ private final class TickView(warehouse: Warehouse) {
       case None => (List(keys), transform)
     }
 
-  /** Publish the staged write-backs of `tables`; a later [[read]] of
-    * one of them reads the published version. */
-  def flush(tables: Seq[String]): Unit = tables.foreach { t =>
-    pending.remove(t).foreach { case (keys, transform) =>
-      warehouse.rewritePartitions(t, keys.reduce(_ union _), transform)
-      bases.remove(t)
-    }
+  /** Publish every table's staged write-backs, in staging order. A
+    * transform flushed after a master may still read that master's
+    * pre-tick files; a publish keeps its predecessor version, so they
+    * are still there. */
+  def flushAll(): Unit = pending.foreach { case (t, (keys, transform)) =>
+    warehouse.rewritePartitions(t, keys.reduce(_ union _), transform)
   }
-
-  def flushAll(): Unit = flush(pending.keys.toList)
 }
 
 /** Continuous sync (SURVEY §2.3 L13; reference src/index.mts:51-89):

@@ -234,11 +234,12 @@ class MergeJobSpec extends AnyFunSuite {
     }
   }
 
-  test("a tick that fails before it ends leaves the transaction tables untouched") {
+  test("a tick that fails before it ends publishes nothing, and the next tick converges") {
     val w = seeded(new PartitionedParquetWarehouse(spark,
       tempDir("graft-fail"), buckets = 4))
-    val txn = Seq("trn_voucher", "trn_accounting")
-    val before = txn.map(t => t -> (w.currentPath(t), sorted(w.read(t))))
+    val tables = Seq("mst_ledger", "trn_voucher", "trn_accounting")
+    def state = tables.map(t => t -> (w.currentPath(t), sorted(w.read(t))))
+    val before = state
     // the renumber re-pull is the last source call of a tick, after
     // every delete, append and cascade step has run
     val failing = new V2Source {
@@ -248,7 +249,14 @@ class MergeJobSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException](new MergeJob(spark,
       Seq(ledgerSpec), Seq(voucherSpec, accountingSpec), failing, w).run())
     assert(e.getMessage == "re-pull failed")
-    assert(txn.map(t => t -> (w.currentPath(t), sorted(w.read(t)))) == before)
+    assert(state == before)
+    // the retry sees the old watermarks and redoes the whole merge,
+    // the ledger rename's cascade to unchanged v4 included
+    new MergeJob(spark, Seq(ledgerSpec), Seq(voucherSpec, accountingSpec),
+      new V2Source, w).run()
+    assert(sorted(w.read("mst_ledger")) == sorted(v2Ledgers))
+    assert(sorted(w.read("trn_voucher")) == sorted(v2Vouchers))
+    assert(sorted(w.read("trn_accounting")) == sorted(v2Accounting))
   }
 
   test("partitioned warehouse: untouched partitions survive the sync byte-identical") {

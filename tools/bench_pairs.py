@@ -2,7 +2,7 @@
 """Paired benchmark runs of two checkouts: a parent and a change.
 
     python3 tools/bench_pairs.py PARENT_DIR CHANGE_DIR --workload W \\
-        --seeds 21 22 23 [--seconds 14] [--trace 0] [--json out.json]
+        --seeds 21 22 23 [--json out.json]
 
 For every seed it runs `perfbench/run.py` once in each checkout, and
 swaps which side runs first from one seed to the next, so a slow spell
@@ -16,6 +16,9 @@ checkout copied together with its `.bench_build/` therefore runs the
 classes of the checkout it was copied from. This script refuses to run
 a checkout whose cached classpath names `target/` directories outside
 it; delete that `.bench_build/` and rerun.
+
+Every run is untraced and lasts the change's BENCHMARK.json
+`run_seconds`, the run length the benchmark sets.
 
 At the end it prints, for every end-to-end metric of the change's
 BENCHMARK.json, each side's median and quartiles and the number of
@@ -58,13 +61,13 @@ def check_build(root):
             f"(e.g. {bad[0]}); delete {build_dir(root)} and rerun")
 
 
-def run_one(root, workload, seed, seconds, trace):
+def run_one(root, workload, seed, seconds):
     """One run.py invocation; returns its result object, or None."""
     check_build(root)
     env = dict(os.environ, CARGO_TARGET_DIR=build_dir(root))
     cmd = [sys.executable, "perfbench/run.py", "--workload", workload,
            "--seed", str(seed), "--seconds", str(seconds),
-           "--trace", str(trace)]
+           "--trace", "0"]
     os.makedirs(build_dir(root), exist_ok=True)
     err = os.path.join(build_dir(root), f"pairs-{workload}-seed{seed}.log")
     with open(err, "w") as e:
@@ -95,8 +98,6 @@ def main():
     p.add_argument("change")
     p.add_argument("--workload", required=True)
     p.add_argument("--seeds", type=int, nargs="+", required=True)
-    p.add_argument("--seconds", type=int)
-    p.add_argument("--trace", type=int, choices=(0, 1), default=0)
     p.add_argument("--json", help="also write every run's result here")
     a = p.parse_args()
 
@@ -108,7 +109,7 @@ def main():
         check_build(root)
     with open(os.path.join(sides["change"], "BENCHMARK.json")) as f:
         bench = json.load(f)
-    seconds = a.seconds or bench["run_seconds"]
+    seconds = bench["run_seconds"]
     metrics = bench["end_to_end"]
 
     runs = []
@@ -116,7 +117,7 @@ def main():
         order = ["parent", "change"] if i % 2 == 0 else ["change", "parent"]
         pair = {"seed": seed, "first": order[0]}
         for side in order:
-            res = run_one(sides[side], a.workload, seed, seconds, a.trace)
+            res = run_one(sides[side], a.workload, seed, seconds)
             pair[side] = res
             if res is not None:
                 vals = " ".join(f"{k}={v['value']}"
