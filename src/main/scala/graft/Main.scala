@@ -49,12 +49,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                           reference's multi-company pattern:
   *                           platform/powershell/
   *                           sync-multiple-company.ps1 + scenario 03)
-  *   --graft-parallel       (full-sync table concurrency; the
-  *                           reference loads strictly sequentially,
-  *                           src/tally.mts:337 — independent tables
-  *                           extract+load from parallel driver
-  *                           threads here, SURVEY §4's easy win.
-  *                           Default 1 = reference behavior)
+  *
+  * A full sync loads its tables concurrently, where the reference
+  * loads them one after another (src/tally.mts:337). Each table runs
+  * extract → XML→TSV → typed rows → sink on one worker of a fixed pool
+  * of `min(tables, available driver cores)` threads named
+  * `graft-sync-<n>`. A worker's own work (response decode, the XML→TSV
+  * regex chain, the local relation build) runs on the driver, so
+  * driver cores bound the pool. Every Tally request of a run, live or
+  * injected, passes through one lock, so Tally still sees one request
+  * at a time, as the reference sends them; one table's conversion and
+  * write overlap the next table's request. The price is driver memory:
+  * up to pool-size tables' responses and TSVs are held at once, not
+  * one (streaming the response into rows is ROADMAP Direction B.2).
+  * A table that fails fails the sync with its own exception, after
+  * the tables already in flight have finished; queued tables never
+  * start.
   */
 object Main {
 
@@ -74,7 +84,6 @@ object Main {
       serverPort: Option[Int] = None,
       bindHost: String = "127.0.0.1",
       configFile: String = "config.json",
-      parallel: Int = 1,
       companiesCsv: Option[String] = None)
 
   def parseArgs(args: Array[String]): Config = {
@@ -105,7 +114,6 @@ object Main {
       serverPort = m.get("graft-server-port").map(_.toInt),
       bindHost = m.getOrElse("graft-bind", "127.0.0.1"),
       configFile = m.getOrElse("graft-config", "config.json"),
-      parallel = m.get("graft-parallel").map(_.toInt).getOrElse(1).max(1),
       companiesCsv = m.get("graft-companies"))
   }
 
@@ -224,11 +232,15 @@ object Main {
       (if (cfg.syncMaster) masters else Nil) ++
         (if (cfg.syncTransaction) transactions else Nil)
 
-    val transport: String => String = transportOverride.getOrElse(
+    val tally: String => String = transportOverride.getOrElse(
       cfg.replayDir match {
         case Some(_) => identity // replay mode bypasses HTTP entirely
         case None => new TallyHttp(cfg.server, cfg.port).post
       })
+    // one Tally request in flight per run, whichever worker sends it
+    val requestLock = new Object
+    val transport: String => String =
+      request => requestLock.synchronized(tally(request))
 
     if (cfg.syncMode == "incremental") {
       // the reference restricts incremental sync to real databases
@@ -257,48 +269,29 @@ object Main {
       return
     }
 
-    // The reference loads tables strictly sequentially
-    // (src/tally.mts:337); extraction here is driver-side per table
-    // (one HTTP stream each) but normalize+write runs distributed.
-    // With --graft-parallel N, independent tables run from N driver
-    // threads — concurrent Spark jobs share the executor pool, and a
-    // live Tally serializes its side anyway, so the win is overlapping
-    // each table's HTTP wait with another's distributed write
-    // (SURVEY §4's easy win).
+    // extraction is driver-side per table (one HTTP stream each),
+    // normalize+write runs distributed; the pool overlaps one table's
+    // request with the others' conversion and write
     def syncTable(spec: TableSpec): Unit = {
-      val df: DataFrame = cfg.replayDir match {
-        case Some(dir) =>
-          val tsv = new String(java.nio.file.Files.readAllBytes(
-            java.nio.file.Paths.get(s"$dir/${spec.name}.data")), "UTF-8")
-          // .data files carry a header line (src/tally.mts:551-552)
-          val body = tsv.split("\r\n").drop(1).mkString("\r\n")
-          TallyXml.tsvToDataFrame(spark, body, spec)
-        case None =>
-          TallyXml.extract(spark, spec, transport,
-            cfg.fromDate, cfg.toDate, cfg.company)
-      }
-      sink(spark, cfg, spec, df)
+      val sc = spark.sparkContext
+      sc.setJobDescription(s"sync ${spec.name}")
+      try {
+        val df: DataFrame = cfg.replayDir match {
+          case Some(dir) =>
+            val tsv = new String(java.nio.file.Files.readAllBytes(
+              java.nio.file.Paths.get(s"$dir/${spec.name}.data")), "UTF-8")
+            // .data files carry a header line (src/tally.mts:551-552)
+            val body = tsv.split("\r\n").drop(1).mkString("\r\n")
+            TallyXml.tsvToDataFrame(spark, body, spec)
+          case None =>
+            TallyXml.extract(spark, spec, transport,
+              cfg.fromDate, cfg.toDate, cfg.company)
+        }
+        sink(spark, cfg, spec, df)
+      } finally sc.setJobDescription(null)
       println(s"[graft] synced ${spec.name}")
     }
-    if (cfg.parallel <= 1) specs.foreach(syncTable)
-    else {
-      val pool = java.util.concurrent.Executors
-        .newFixedThreadPool(cfg.parallel)
-      try {
-        val futures = specs.map(spec =>
-          pool.submit(new java.util.concurrent.Callable[Unit] {
-            def call(): Unit = syncTable(spec)
-          }))
-        try futures.foreach(_.get()) // propagate the first failure
-        catch { case e: Throwable =>
-          // abort, don't drain: shutdown() would still run every
-          // queued table while the session is being torn down
-          futures.foreach(_.cancel(true))
-          pool.shutdownNow()
-          throw e
-        }
-      } finally pool.shutdown()
-    }
+    onSyncPool(specs)(syncTable)
 
     // post-import script (S16): the reference's user-supplied SQL step
     // after a sync (post-import-scripts/), run against the warehouse
@@ -309,6 +302,37 @@ object Main {
         java.nio.file.Paths.get(scriptPath)), "UTF-8")
       val n = SqlScript.runOnParquetDir(spark, cfg.schema, script)
       println(s"[graft] post-import: $n statements from $scriptPath")
+    }
+  }
+
+  /** Run `f` on every spec from a fixed pool of `min(specs, driver
+    * cores)` threads named `graft-sync-<n>`. The first failure cancels
+    * the specs not yet started and, once the ones in flight have
+    * finished, is rethrown as the spec's own exception. Every worker
+    * has ended when this returns or throws, so nothing of the sync
+    * still writes after it. */
+  private def onSyncPool(specs: Seq[TableSpec])(f: TableSpec => Unit): Unit = {
+    val size = math.max(1,
+      math.min(specs.size, Runtime.getRuntime.availableProcessors))
+    val workers = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(size,
+      (r: Runnable) => {
+        val t = new Thread(r, s"graft-sync-${workers.size + 1}")
+        workers.add(t)
+        t
+      })
+    val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
+    val futures = specs.map(spec => done.submit(() => f(spec)))
+    try specs.foreach(_ => done.take().get())
+    catch { case e: Throwable =>
+      futures.foreach(_.cancel(false))
+      throw (e match {
+        case x: java.util.concurrent.ExecutionException => x.getCause
+        case x => x
+      })
+    } finally {
+      pool.shutdown()
+      workers.forEach(_.join())
     }
   }
 

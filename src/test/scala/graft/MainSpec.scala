@@ -107,36 +107,113 @@ class MainSpec extends AnyFunSuite {
     assert(spark.read.parquet(s"$dir/wh/mst_ledger").count() == 1)
   }
 
-  test("parallel full sync writes every table (same result as serial)") {
-    val dir = java.nio.file.Files.createTempDirectory("graft-par").toString
-    val yaml =
-      """master:
-        |  - name: mst_a
-        |    collection: Ledger
-        |    nature: Primary
-        |    fields:
-        |      - name: guid
-        |        field: Guid
-        |        type: text
-        |  - name: mst_b
-        |    collection: Group
-        |    nature: Primary
-        |    fields:
-        |      - name: guid
-        |        field: Guid
-        |        type: text
-        |""".stripMargin
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/spec.yaml"), yaml)
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/mst_a.data"), "guid\r\na1\r\na2\r\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get(s"$dir/mst_b.data"), "guid\r\nb1\r\n")
-    Main.run(spark, Main.Config(
+  /** A definition of one text column per table, one table per
+    * `name -> Tally collection`, written to `dir/spec.yaml`. */
+  private def guidSpec(dir: String, tables: (String, String)*): String = {
+    val yaml = tables.map { case (name, collection) =>
+      s"""  - name: $name
+         |    collection: $collection
+         |    nature: Primary
+         |    fields:
+         |      - name: guid
+         |        field: Guid
+         |        type: text
+         |""".stripMargin
+    }.mkString("master:\n", "", "")
+    val path = s"$dir/spec.yaml"
+    java.nio.file.Files.writeString(java.nio.file.Paths.get(path), yaml)
+    path
+  }
+
+  private val fourTables = Seq("mst_ledger" -> "Ledger",
+    "mst_group" -> "Group", "mst_vouchertype" -> "VoucherType",
+    "mst_unit" -> "Unit")
+
+  private def fourTableFake(): FakeTally = {
+    val fake = new FakeTally
+    fake.tables = fourTables.map { case (name, collection) =>
+      collection -> (1 to 3).map(i => Map("Guid" -> s"$name-$i"))
+    }.toMap
+    fake
+  }
+
+  private def syncThreads(): Set[Thread] = {
+    import scala.jdk.CollectionConverters._
+    Thread.getAllStackTraces.keySet.asScala.toSet
+      .filter(t => t.getName.startsWith("graft-sync-") && t.isAlive)
+  }
+
+  test("full sync loads tables on worker threads, one Tally request in flight") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pool").toString
+    val fake = fourTableFake()
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val callers = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val counted: String => String = { request =>
+      peak.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      callers.add(Thread.currentThread.getName)
+      try { Thread.sleep(20); fake.transport(request) }
+      finally inFlight.decrementAndGet()
+    }
+    Main.run(spark, Main.Config(technology = "parquet",
+      schema = s"$dir/wh", definition = guidSpec(dir, fourTables: _*),
+      syncMode = "full"), transportOverride = Some(counted))
+    assert(peak.get == 1)
+    assert(fake.requests.size == 4)
+    assert(callers.stream().allMatch(_.startsWith("graft-sync-")))
+    assert(callers.size >= math.min(2, Runtime.getRuntime.availableProcessors),
+      s"requests came from $callers")
+    fourTables.foreach { case (name, _) =>
+      val got = spark.read.parquet(s"$dir/wh/$name")
+        .collect().map(_.getString(0)).toSet
+      assert(got == (1 to 3).map(i => s"$name-$i").toSet, name)
+    }
+  }
+
+  test("a table that fails fails the sync with its own error, workers ended") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-fail").toString
+    val fake = fourTableFake()
+    val failing: String => String = { request =>
+      if (request.contains("<TYPE>Group</TYPE>"))
+        throw new IllegalStateException("Tally refused the Group export")
+      fake.transport(request)
+    }
+    val e = intercept[Exception](Main.run(spark, Main.Config(
       technology = "parquet", schema = s"$dir/wh",
-      definition = s"$dir/spec.yaml", replayDir = Some(dir), parallel = 2))
-    assert(spark.read.parquet(s"$dir/wh/mst_a").count() == 2)
-    assert(spark.read.parquet(s"$dir/wh/mst_b").count() == 1)
+      definition = guidSpec(dir, fourTables: _*), syncMode = "full"),
+      transportOverride = Some(failing)))
+    assert(e.getClass == classOf[IllegalStateException])
+    assert(e.getMessage == "Tally refused the Group export")
+    assert(syncThreads().isEmpty, s"still alive: ${syncThreads()}")
+  }
+
+  test("each table's Spark jobs carry the description `sync <table>`") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-desc").toString
+    val tables = Seq("mst_desc_a" -> "Ledger", "mst_desc_b" -> "Group")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/mst_desc_a.data"), "guid\r\na1\r\n")
+    java.nio.file.Files.writeString(
+      java.nio.file.Paths.get(s"$dir/mst_desc_b.data"), "guid\r\nb1\r\n")
+    val seen = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          s: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(s.properties)
+          .flatMap(p => Option(p.getProperty("spark.job.description")))
+          .foreach(seen.add)
+    }
+    val want = tables.map { case (name, _) => s"sync $name" }.toSet
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      Main.run(spark, Main.Config(technology = "parquet",
+        schema = s"$dir/wh", definition = guidSpec(dir, tables: _*),
+        replayDir = Some(dir)))
+      // the listener bus delivers job events asynchronously
+      val deadline = System.nanoTime() + 10_000_000_000L
+      while (!want.forall(seen.contains) && System.nanoTime() < deadline)
+        Thread.sleep(20)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(want.forall(seen.contains), s"job descriptions seen: $seen")
   }
 
   test("post-import flag runs a script against the fresh warehouse") {

@@ -21,8 +21,16 @@ Every run is untraced and lasts the change's BENCHMARK.json
 `run_seconds`, the run length the benchmark sets.
 
 At the end it prints, for every end-to-end metric of the change's
-BENCHMARK.json, each side's median and quartiles and the number of
-pairs the change won (strictly better in the metric's direction).
+BENCHMARK.json, each side's median and quartiles, the number of pairs
+the change won (strictly better in the metric's direction) and a
+verdict, with the metric's relative `bound` from BENCHMARK.json:
+
+  gain          the change won at least 9 of every 10 pairs, and its
+                median is better by more than the parent's IQR
+  regressed     the change's median is worse by more than the bound
+  unresolved    the parent's IQR exceeds the bound times its median,
+                and some change run does not beat every parent run
+  within bound  otherwise
 """
 import argparse
 import json
@@ -91,6 +99,23 @@ def quartiles(xs):
     return q1, med, q3
 
 
+def verdict(parent, change, wins, bound, lower):
+    """The verdict on one metric: its paired values, the change's win
+    count and the metric's relative bound (see the module doc)."""
+    p1, pmed, p3 = quartiles(parent)
+    cmed = quartiles(change)[1]
+    gain = pmed - cmed if lower else cmed - pmed
+    if 10 * wins >= 9 * len(parent) and gain > p3 - p1:
+        return "gain"
+    if -gain > bound * abs(pmed):
+        return "regressed"
+    beats_all = (max(change) < min(parent) if lower
+                 else min(change) > max(parent))
+    if p3 - p1 > bound * abs(pmed) and not beats_all:
+        return "unresolved"
+    return "within bound"
+
+
 def main():
     p = argparse.ArgumentParser(description=__doc__,
                                 formatter_class=argparse.RawTextHelpFormatter)
@@ -135,7 +160,7 @@ def main():
     print(f"workload {a.workload}: {len(ok)} complete pairs of {len(runs)}, "
           f"{wrong} incorrect runs")
     print(f"{'metric':<14} {'side':<7} {'q1':>10} {'median':>10} {'q3':>10}"
-          f"   change wins")
+          f"   change wins   verdict")
     for m in metrics:
         name = m["name"]
         have = [r for r in ok if name in r["parent"]["metrics"]
@@ -148,9 +173,11 @@ def main():
         lower = m["better"] == "lower"
         wins = sum(1 for pv, cv in zip(vals["parent"], vals["change"])
                    if (cv < pv if lower else cv > pv))
+        v = verdict(vals["parent"], vals["change"], wins, m["bound"], lower)
         for s in ("parent", "change"):
             q1, med, q3 = quartiles(vals[s])
-            tail = f"   {wins}/{len(have)}" if s == "change" else ""
+            tail = (f"   {f'{wins}/{len(have)}':<11}   {v}"
+                    if s == "change" else "")
             print(f"{name:<14} {s:<7} {q1:>10.3f} {med:>10.3f} {q3:>10.3f}"
                   f"{tail}")
     sys.exit(0 if len(ok) == len(runs) and wrong == 0 else 1)
