@@ -3,8 +3,10 @@ package graft
 import graft.server.GraftServer
 import graft.sources.{Emitters, SpecLoader, SqlScript, TableSpec, TallyHttp,
   TallyXml}
-import graft.tally.{ContinuousSync, ParquetWarehouse,
-  PartitionedParquetWarehouse, SyncRunner, XmlTallySource}
+import graft.tally.{ContinuousSync, MergeJob, ParquetWarehouse,
+  PartitionedParquetWarehouse, XmlTallySource}
+import java.util.concurrent.CancellationException
+import java.util.concurrent.atomic.AtomicReference
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** CLI entry point with the reference's flag surface
@@ -24,7 +26,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *   --database-schema      (output directory)
   *   --graft-definition     (YAML spec path)
   *   --graft-replay         (dir of <table>.data TSV files instead of
-  *                           a live Tally server)
+  *                           a live Tally server; full sync only)
   *   --graft-sync           (full|incremental — reference config.json
   *                           `sync`; incremental drives the MergeJob
   *                           against a bucketed parquet warehouse)
@@ -51,20 +53,22 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *                           sync-multiple-company.ps1 + scenario 03)
   *
   * A full sync loads its tables concurrently, where the reference
-  * loads them one after another (src/tally.mts:337). Each table runs
-  * extract → XML→TSV → typed rows → sink on one worker of a fixed pool
-  * of `min(tables, available driver cores)` threads named
-  * `graft-sync-<n>`. A worker's own work (response decode, the XML→TSV
-  * regex chain, the local relation build) runs on the driver, so
-  * driver cores bound the pool. Every Tally request of a run, live or
-  * injected, passes through one lock, so Tally still sees one request
-  * at a time, as the reference sends them; one table's conversion and
-  * write overlap the next table's request. The price is driver memory:
-  * up to pool-size tables' responses and TSVs are held at once, not
-  * one (streaming the response into rows is ROADMAP Direction B.2).
-  * A table that fails fails the sync with its own exception, after
-  * the tables already in flight have finished; queued tables never
-  * start.
+  * loads them one after another (src/tally.mts:337); an incremental
+  * sync loads the tables its warehouse lacks the same way, after the
+  * merge. Each table runs extract → XML→TSV → typed rows → write on
+  * one worker of a fixed pool of `min(tables, available driver cores)`
+  * threads named `graft-sync-<n>`. A worker's own work (response
+  * decode, the XML→TSV regex chain, the local relation build) runs on
+  * the driver, so driver cores bound the pool. Every Tally request of
+  * a run, live or injected, passes through one lock, so Tally still
+  * sees one request at a time, as the reference sends them; one
+  * table's conversion and write overlap the next table's request. The
+  * price is driver memory: up to pool-size tables' responses and TSVs
+  * are held at once, not one (streaming the response into rows is
+  * ROADMAP Direction B.2). A table that fails fails the sync with its
+  * own exception, after the tables already in flight have finished;
+  * queued tables never start, and no request is sent after the
+  * failure, so a hung Tally fails the sync after one timeout.
   */
 object Main {
 
@@ -228,19 +232,27 @@ object Main {
     val yamlText = new String(java.nio.file.Files.readAllBytes(
       java.nio.file.Paths.get(cfg.definition)), "UTF-8")
     val (masters, transactions) = SpecLoader.load(yamlText)
-    val specs =
-      (if (cfg.syncMaster) masters else Nil) ++
-        (if (cfg.syncTransaction) transactions else Nil)
+    val m = if (cfg.syncMaster) masters else Nil
+    val t = if (cfg.syncTransaction) transactions else Nil
+    val specs = m ++ t
 
     val tally: String => String = transportOverride.getOrElse(
       cfg.replayDir match {
         case Some(_) => identity // replay mode bypasses HTTP entirely
         case None => new TallyHttp(cfg.server, cfg.port).post
       })
-    // one Tally request in flight per run, whichever worker sends it
+    // one Tally request in flight per run, whichever worker sends it.
+    // The run's first failure is kept: once it is set, a request not
+    // yet sent fails without reaching Tally, and a request that fails
+    // sets it before the lock lets the next one out
+    val failure = new AtomicReference[Throwable]
     val requestLock = new Object
-    val transport: String => String =
-      request => requestLock.synchronized(tally(request))
+    val transport: String => String = request => requestLock.synchronized {
+      if (failure.get != null)
+        throw new CancellationException("not sent: a table already failed")
+      try tally(request)
+      catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+    }
 
     if (cfg.syncMode == "incremental") {
       // the reference restricts incremental sync to real databases
@@ -248,9 +260,13 @@ object Main {
       // warehouse — partition-level rewrites need partitioned tables
       require(cfg.technology == "parquet",
         s"incremental sync requires parquet, not ${cfg.technology}")
+      // replay files hold whole tables; the merge's probes and filtered
+      // extracts need a live Tally
+      require(cfg.replayDir.isEmpty,
+        "incremental sync needs a live Tally, not --graft-replay")
       val warehouse = new PartitionedParquetWarehouse(spark, cfg.schema)
-      val m = if (cfg.syncMaster) masters else Nil
-      val t = if (cfg.syncTransaction) transactions else Nil
+      def existing(specs: Seq[TableSpec]) =
+        specs.filter(s => warehouse.exists(s.name))
       def tick() = {
         // fresh source per tick: the watermark probe memoizes per
         // sync run (reference calls updateLastAlterId at the top of
@@ -258,7 +274,16 @@ object Main {
         val source = new XmlTallySource(spark, transport,
           cfg.fromDate, cfg.toDate, cfg.company,
           voucherSpec = transactions.find(_.name == "trn_voucher"))
-        val r = SyncRunner.incremental(spark, m, t, source, warehouse)
+        // merge the tables the warehouse holds, then load the missing
+        // ones whole (the reference instead refuses and asks for a full
+        // sync first, docs/incremental-sync.md). The order matters: a
+        // freshly loaded table carries live alterids, and letting it
+        // into the merge's max-watermark would raise the `$AlterID > n`
+        // floor past changes the stale tables still need to pull
+        val r = new MergeJob(spark, existing(m), existing(t), source,
+          warehouse).run()
+        loadTables(spark, cfg, specs.filterNot(s => warehouse.exists(s.name)),
+          transport, failure)((spec, df) => warehouse.write(spec.name, df))
         println(s"[graft] incremental sync: $r")
         r
       }
@@ -269,10 +294,34 @@ object Main {
       return
     }
 
-    // extraction is driver-side per table (one HTTP stream each),
-    // normalize+write runs distributed; the pool overlaps one table's
-    // request with the others' conversion and write
-    def syncTable(spec: TableSpec): Unit = {
+    loadTables(spark, cfg, specs, transport, failure)(sink(spark, cfg, _, _))
+
+    // post-import script (S16): the reference's user-supplied SQL step
+    // after a sync (post-import-scripts/), run against the warehouse
+    cfg.postImport.foreach { scriptPath =>
+      require(cfg.technology == "parquet",
+        s"--graft-postimport needs a parquet warehouse, not ${cfg.technology}")
+      val script = new String(java.nio.file.Files.readAllBytes(
+        java.nio.file.Paths.get(scriptPath)), "UTF-8")
+      val n = SqlScript.runOnParquetDir(spark, cfg.schema, script)
+      println(s"[graft] post-import: $n statements from $scriptPath")
+    }
+  }
+
+  /** The one whole-table loader, for the full sync and the incremental
+    * bootstrap: each spec's table is extracted from Tally (or read from
+    * its replay file), converted to rows and handed to `write`, on the
+    * `graft-sync-<n>` pool the object doc describes. A table that fails
+    * sets the run's `failure`, under which `transport` sends nothing
+    * more, and cancels the specs not yet started; once the tables in
+    * flight have finished, the first failure is rethrown. Every worker
+    * has ended when this returns or throws, so nothing of the load
+    * still writes after it. No specs, no pool. */
+  private def loadTables(spark: SparkSession, cfg: Config,
+      specs: Seq[TableSpec], transport: String => String,
+      failure: AtomicReference[Throwable])(
+      write: (TableSpec, DataFrame) => Unit): Unit = if (specs.nonEmpty) {
+    def load(spec: TableSpec): Unit = {
       val sc = spark.sparkContext
       sc.setJobDescription(s"sync ${spec.name}")
       try {
@@ -287,33 +336,12 @@ object Main {
             TallyXml.extract(spark, spec, transport,
               cfg.fromDate, cfg.toDate, cfg.company)
         }
-        sink(spark, cfg, spec, df)
-      } finally sc.setJobDescription(null)
+        write(spec, df)
+      } catch { case e: Throwable => failure.compareAndSet(null, e); throw e }
+      finally sc.setJobDescription(null)
       println(s"[graft] synced ${spec.name}")
     }
-    onSyncPool(specs)(syncTable)
-
-    // post-import script (S16): the reference's user-supplied SQL step
-    // after a sync (post-import-scripts/), run against the warehouse
-    cfg.postImport.foreach { scriptPath =>
-      require(cfg.technology == "parquet",
-        s"--graft-postimport needs a parquet warehouse, not ${cfg.technology}")
-      val script = new String(java.nio.file.Files.readAllBytes(
-        java.nio.file.Paths.get(scriptPath)), "UTF-8")
-      val n = SqlScript.runOnParquetDir(spark, cfg.schema, script)
-      println(s"[graft] post-import: $n statements from $scriptPath")
-    }
-  }
-
-  /** Run `f` on every spec from a fixed pool of `min(specs, driver
-    * cores)` threads named `graft-sync-<n>`. The first failure cancels
-    * the specs not yet started and, once the ones in flight have
-    * finished, is rethrown as the spec's own exception. Every worker
-    * has ended when this returns or throws, so nothing of the sync
-    * still writes after it. */
-  private def onSyncPool(specs: Seq[TableSpec])(f: TableSpec => Unit): Unit = {
-    val size = math.max(1,
-      math.min(specs.size, Runtime.getRuntime.availableProcessors))
+    val size = math.min(specs.size, Runtime.getRuntime.availableProcessors)
     val workers = new java.util.concurrent.ConcurrentLinkedQueue[Thread]()
     val pool = java.util.concurrent.Executors.newFixedThreadPool(size,
       (r: Runnable) => {
@@ -322,14 +350,12 @@ object Main {
         t
       })
     val done = new java.util.concurrent.ExecutorCompletionService[Unit](pool)
-    val futures = specs.map(spec => done.submit(() => f(spec)))
+    val futures = specs.map(spec => done.submit(() => load(spec)))
     try specs.foreach(_ => done.take().get())
     catch { case e: Throwable =>
       futures.foreach(_.cancel(false))
-      throw (e match {
-        case x: java.util.concurrent.ExecutionException => x.getCause
-        case x => x
-      })
+      // a refused request can complete before the failure that caused it
+      throw Option(failure.get).getOrElse(e)
     } finally {
       pool.shutdown()
       workers.forEach(_.join())

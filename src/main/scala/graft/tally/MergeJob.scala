@@ -321,16 +321,9 @@ final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
     def mergeGroup(specs: Seq[TableSpec], wm: Long): Unit = {
       // delete phase: primary tables detect deletes/changes via diff
       specs.filter(_.nature == "Primary").foreach { spec =>
-        val target = view.read(spec.name)
-        val diff = broadcast(source.diffSnapshot(spec))
-        val deletedKeys = target.join(diff, Seq(keyCol), "left_anti")
-          .select(col(keyCol))
-        val changedKeys = target.as("t")
-          .join(diff.as("s"), col(s"t.$keyCol") === col(s"s.$keyCol"))
-          .filter(col(s"t.$versionCol") =!= col(s"s.$versionCol"))
-          .select(col(s"t.$keyCol").as(keyCol))
-        val removeKeys = deletedKeys.union(changedKeys).distinct()
-          .localCheckpoint(eager = true)
+        val removeKeys = Cdc.changeLog(view.read(spec.name),
+            broadcast(source.diffSnapshot(spec)), keyCol, versionCol)
+          .select(col(keyCol)).distinct().localCheckpoint(eager = true)
         deleted(spec.name) = removeKeys.count()
         if (deleted(spec.name) > 0) {
           view.stage(spec.name, removeKeys,

@@ -3,7 +3,6 @@ package graft.tally
 import graft.functions.TallyTypes.{TNumber, TText}
 import graft.sources.{FieldSpec, TableSpec, TallyXml}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Production [[TallySource]]: every probe and extract the incremental
   * merge needs, compiled to TDL and run over a transport (live
@@ -58,9 +57,6 @@ final class XmlTallySource(spark: SparkSession,
   def incrementalRows(spec: TableSpec, since: Long): DataFrame =
     extract(spec.copy(filters = spec.filters :+ s"$$AlterID > $since"))
 
-  /** Unfiltered extract — the full-sync path (src/tally.mts:309-360). */
-  def fullRows(spec: TableSpec): DataFrame = extract(spec)
-
   def voucherNumbers(): DataFrame = {
     val base = voucherSpec.getOrElse(TableSpec(
       "trn_voucher", "Voucher", "Primary", fields = Nil))
@@ -73,43 +69,5 @@ final class XmlTallySource(spark: SparkSession,
       filters = base.filters :+
         "$$IsEqual:($NumberingMethod:VoucherType:$VoucherTypeName):\"Automatic\"",
       cascadeUpdate = Nil, cascadeDelete = Nil))
-  }
-}
-
-/** Full + incremental sync orchestration over a [[Warehouse]] — the
-  * CLI's engine room, shared by [[graft.Main]] and tests.
-  *
-  * `fullLoad` mirrors the reference's full sync (truncate + reload,
-  * src/tally.mts:309-360); `incremental` merges the tables the
-  * warehouse already holds, then bootstraps any missing table with a
-  * full extract (the reference instead refuses and tells the user to
-  * run a full sync first — docs/incremental-sync.md). Merge-then-
-  * bootstrap order matters: a freshly-loaded table carries live
-  * alterids, and letting it into the merge's max-watermark would
-  * raise the `$AlterID > n` floor past changes the stale tables still
-  * need to pull.
-  */
-object SyncRunner {
-
-  def fullLoad(spark: SparkSession, specs: Seq[TableSpec],
-      source: XmlTallySource, warehouse: Warehouse): Unit =
-    specs.foreach { spec =>
-      val df = graft.operators.SurrogateFk.enrich(
-        source.fullRows(spec), spec,
-        t => if (warehouse.exists(t)) Some(warehouse.read(t)) else None)
-      warehouse.write(spec.name, df)
-    }
-
-  def incremental(spark: SparkSession, masters: Seq[TableSpec],
-      transactions: Seq[TableSpec], source: XmlTallySource,
-      warehouse: Warehouse): SyncReport = {
-    def existing(specs: Seq[TableSpec]) =
-      specs.filter(s => warehouse.exists(s.name))
-    val report = new MergeJob(spark, existing(masters),
-      existing(transactions), source, warehouse).run()
-    val missing = (masters ++ transactions).filterNot(s =>
-      warehouse.exists(s.name))
-    fullLoad(spark, missing, source, warehouse)
-    report
   }
 }

@@ -165,6 +165,48 @@ class IncrementalSyncCliSpec extends AnyFunSuite {
     assert(nums == Map("v1" -> "2", "v3" -> "1", "v4" -> "4")) // renumbered
   }
 
+  test("the bootstrap loads missing tables on the sync pool, one request in flight") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-boot").toString
+    writeSpec(dir)
+    val fake = new FakeTally
+    v1(fake)
+    val inFlight = new java.util.concurrent.atomic.AtomicInteger
+    val peak = new java.util.concurrent.atomic.AtomicInteger
+    val extractCallers = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val counted: String => String = { request =>
+      peak.accumulateAndGet(inFlight.incrementAndGet(), math.max)
+      // whole-table extracts: neither the probe nor a `$AlterID >` pull
+      if (!request.contains("AlterIdProbe") && !request.contains("$AlterID >"))
+        extractCallers.add(Thread.currentThread.getName)
+      try { Thread.sleep(20); fake.transport(request) }
+      finally inFlight.decrementAndGet()
+    }
+    Main.run(spark, cfg(dir), transportOverride = Some(counted))
+    assert(peak.get == 1)
+    assert(extractCallers.size == 4, s"extracts from $extractCallers")
+    assert(extractCallers.stream().allMatch(_.startsWith("graft-sync-")),
+      s"extracts from $extractCallers")
+
+    Main.run(spark, cfg(dir).copy(syncMode = "full", schema = s"$dir/full"),
+      transportOverride = Some(fake.transport))
+    val wh = new PartitionedParquetWarehouse(spark, s"$dir/wh")
+    Seq("mst_ledger", "mst_vouchertype", "trn_voucher", "trn_accounting")
+      .foreach { t =>
+        assert(sorted(wh.read(t)) == sorted(spark.read.parquet(s"$dir/full/$t")),
+          s"table $t differs from a full load")
+      }
+  }
+
+  test("incremental sync refuses replay mode and writes nothing") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
+    writeSpec(dir)
+    val e = intercept[IllegalArgumentException](
+      Main.run(spark, cfg(dir).copy(replayDir = Some(dir))))
+    assert(e.getMessage.contains("--graft-replay"))
+    val written = Option(new java.io.File(s"$dir/wh").list()).toSeq.flatten
+    assert(written.isEmpty, s"tables written: $written")
+  }
+
   test("continuous mode ticks the merge and honors the no-change gate") {
     val dir = java.nio.file.Files.createTempDirectory("graft-cont").toString
     writeSpec(dir)

@@ -173,17 +173,28 @@ class MainSpec extends AnyFunSuite {
   test("a table that fails fails the sync with its own error, workers ended") {
     val dir = java.nio.file.Files.createTempDirectory("graft-fail").toString
     val fake = fourTableFake()
+    val calls = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val failing: String => String = { request =>
-      if (request.contains("<TYPE>Group</TYPE>"))
+      val called = fourTables.map(_._2)
+        .find(c => request.contains(s"<TYPE>$c</TYPE>")).get
+      calls.add(called)
+      Thread.sleep(20)
+      if (called == "Group")
         throw new IllegalStateException("Tally refused the Group export")
       fake.transport(request)
     }
+    // Group first, so its worker is the likeliest to hold the lock while
+    // the others queue on it. With one core the pool has one worker and
+    // the queued tables never start, so the order alone proves nothing
+    val tables = fourTables.sortBy(_._2 != "Group")
     val e = intercept[Exception](Main.run(spark, Main.Config(
       technology = "parquet", schema = s"$dir/wh",
-      definition = guidSpec(dir, fourTables: _*), syncMode = "full"),
+      definition = guidSpec(dir, tables: _*), syncMode = "full"),
       transportOverride = Some(failing)))
     assert(e.getClass == classOf[IllegalStateException])
     assert(e.getMessage == "Tally refused the Group export")
+    // workers already waiting on the request lock send nothing more
+    assert(calls.toArray.last == "Group", s"calls in order: $calls")
     assert(syncThreads().isEmpty, s"still alive: ${syncThreads()}")
   }
 
