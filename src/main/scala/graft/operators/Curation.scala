@@ -242,8 +242,8 @@ object Curation {
     * exactly once, so no duplicate rows arise here; a deployment
     * restarting mid-append gets at-least-once parquet appends, which
     * IVF serving tolerates (duplicate neighbor rows rank identically
-    * and dedup at the candidate stage) — the idempotent variant is
-    * the marker-protocol rebuild.
+    * and dedup at the candidate stage) — the idempotent variant is a
+    * rebuild through the artifact store (`Warehouse.materializedDir`).
     *
     * Scale notes: per-batch cost is the batch's encode + one
     * partitioned append (the measured ∝-batch ScaleBench law); the

@@ -45,20 +45,11 @@ private[graft] object Warehouse {
     * and directory mtimes for last-use aging (object stores have no
     * directory metadata). A configured `s3://`/`gs://`/`hdfs://`
     * root would not fail here — it would CORRUPT SILENTLY under
-    * concurrent builders, which is strictly worse. A deployment that
-    * wants the warehouse on an object store uses the CONDITIONAL-PUT
-    * protocol, implemented as [[markerLoadOrBuild]] behind
-    * `spark.graft.index.commitProtocol=marker` (round-15 verdict
-    * #7): unique data prefixes (never rename, never interleave),
-    * one put-if-absent pointer object as the commit, losers adopt
-    * the winner, last-use as a marker object instead of dir mtimes
-    * — spec-gated for concurrent convergence on local disk, needing
-    * only the byte transport swapped for a real bucket (whose
-    * native conditional write is content-atomic, strictly stronger
-    * than the local createNewFile stand-in). The scheme guard below
-    * still rejects raw `s3://`/`gs://` roots because everything
-    * here speaks java.io; mount the store through a POSIX layer and
-    * select the marker protocol. */
+    * concurrent builders, which is strictly worse. The epoch
+    * manifest swap ([[commitEpoch]]) and the writer lock
+    * ([[withIndexWriter]]) rest on the same guarantees, so an
+    * object-store deployment needs a commit log in place of the
+    * renames; until then, mount the store through a POSIX layer. */
   private[graft] def indexRoot(spark: SparkSession): String = {
     val root = indexRoot0(spark)
     // any "scheme:" prefix counts — URI forms WITHOUT a slash
@@ -73,10 +64,8 @@ private[graft] object Warehouse {
           s"spark.graft.index.dir '$root': scheme '$s' is not " +
             "supported — the warehouse commit protocol requires POSIX " +
             "rename atomicity, file locks, and directory mtimes, which " +
-            "object stores do not provide (see Warehouse.indexRoot " +
-            "for the conditional-put protocol an object-store variant " +
-            "needs). Point the root at local/NFS disk or a POSIX " +
-            "mount of the store.")
+            "object stores do not provide. Point the root at local/NFS " +
+            "disk or a POSIX mount of the store.")
       case Some(_) => decodeFileUri(root) // an explicit file: root
       case None => root
     }
@@ -273,137 +262,6 @@ private[graft] object Warehouse {
         System.err.println(s"[pairidx] sweeping orphaned ${d.getName}")
         deleteRec(d)
       }
-  }
-
-  /** Selected commit protocol: `rename` (default — POSIX atomic
-    * rename + advisory locks + dir mtimes) or `marker` — the
-    * CONDITIONAL-PUT protocol the [[indexRoot]] scaladoc documents
-    * for object stores, now an implemented code path (round-15
-    * verdict #7) rather than a README. */
-  private def protocol(spark: SparkSession): String =
-    spark.conf.get("spark.graft.index.commitProtocol", "rename") match {
-      case p @ ("rename" | "marker") => p
-      case other => throw new IllegalArgumentException(
-        s"spark.graft.index.commitProtocol '$other' is not supported " +
-          "— use 'rename' (POSIX, default) or 'marker' " +
-          "(conditional-put, object-store-shaped)")
-    }
-
-  /** The `marker` (conditional-put) publish path — the degraded-
-    * atomicity mode for stores without rename atomicity, file locks,
-    * or directory mtimes. Shape:
-    *
-    *  - every builder writes its parquet into a UNIQUELY named data
-    *    prefix (`family-sha-data-uuid`) that will remain the
-    *    artifact's final home — nothing is ever renamed, and two
-    *    concurrent builders can never interleave part files under
-    *    one prefix (publishing "directly under the final name" would
-    *    let a loser's parts double the winner's rows);
-    *  - commit is ONE conditional put of a tiny POINTER object at
-    *    the key-derived name (`family-sha.ptr`, content = the data
-    *    prefix). `createNewFile` is the local-filesystem stand-in
-    *    for put-if-absent; an object-store deployment backs the same
-    *    call with its native conditional write, which puts name AND
-    *    content atomically — closing the create-then-write crash
-    *    window this local stand-in retries around;
-    *  - the LOSER of the race sees its put rejected, deletes its own
-    *    data prefix, and adopts the winner through the pointer
-    *    (key-verified + `_GRAFT_OK`-completed, same reader rules as
-    *    the rename protocol);
-    *  - last-use is recorded as a `_GRAFT_LASTUSE` marker object
-    *    (never a directory mtime), which the same-family sweep ages
-    *    by — or which a store's native lifecycle/TTL rules key on.
-    *
-    * Everything here speaks java.io against the (POSIX-checked)
-    * root, so the protocol is exercised and spec-gated on local
-    * disk; pointing it at a real bucket needs only the byte
-    * transport swapped, not the commit logic. */
-  private[graft] def markerLoadOrBuild(spark: SparkSession,
-      family: String, key: String)(build: String => Unit): String = {
-    val root = new java.io.File(indexRoot(spark))
-    root.mkdirs()
-    val ptr = new java.io.File(root, s"$family-${sha16(key)}.ptr")
-    def resolve(): Option[String] = {
-      if (!ptr.exists()) None
-      else {
-        val src = scala.io.Source.fromFile(ptr, "UTF-8")
-        val target = try src.mkString.trim finally src.close()
-        if (target.isEmpty) None // winner crashed mid-commit (local
-        // stand-in only — a real conditional put is content-atomic)
-        else {
-          val dir = new java.io.File(root, target)
-          if (usable(dir, key)) {
-            writeLastUse(dir)
-            Some(dir.toString)
-          } else None
-        }
-      }
-    }
-    resolve() match {
-      case Some(d) =>
-        System.err.println(s"[pairidx] reusing (marker) $key <- $d")
-        return d
-      case None if ptr.exists() =>
-        // pointer to a missing/mismatched/incomplete target — but an
-        // EMPTY-reading pointer can also be a live winner inside its
-        // local create-then-write commit window (a real conditional
-        // put is content-atomic; the stand-in is not). Give it the
-        // same brief retry the loser-adopt loop gets before treating
-        // it as a crashed publish; deleting a live winner's pointer
-        // would admit a second publisher and two concurrent writers
-        // to one pointer file (round-16 advice).
-        var retried: Option[String] = None
-        var retries = 0
-        while (retried.isEmpty && retries < 5 && ptr.exists()) {
-          Thread.sleep(100)
-          retried = resolve()
-          retries += 1
-        }
-        retried match {
-          case Some(d) =>
-            System.err.println(s"[pairidx] reusing (marker) $key <- $d")
-            return d
-          case None =>
-            // still unadoptable after the grace window: crashed or
-            // doctored publish. Remove it and re-race — the
-            // conditional create below still decides one winner.
-            ptr.delete()
-        }
-      case None =>
-    }
-    val dataDir = new java.io.File(root,
-      s"$family-${sha16(key)}-data-${java.util.UUID.randomUUID()}")
-    val t0 = System.nanoTime()
-    build(dataDir.toString)
-    val w = new java.io.PrintWriter(
-      new java.io.File(dataDir, "_graft_key.txt"), "UTF-8")
-    try w.print(key) finally w.close()
-    new java.io.File(dataDir, "_GRAFT_OK").createNewFile()
-    writeLastUse(dataDir)
-    System.err.println(f"[pairidx] built (marker) $key in " +
-      f"${(System.nanoTime() - t0) / 1e9}%.2f s -> $dataDir")
-    if (ptr.createNewFile()) {
-      // won the conditional put: publish the pointer content
-      val pw = new java.io.PrintWriter(ptr, "UTF-8")
-      try pw.print(dataDir.getName) finally pw.close()
-      sweepMarkerOrphans(spark, root, family,
-        keepData = dataDir.getName, ptrName = ptr.getName)
-      dataDir.toString
-    } else {
-      // lost: adopt the winner (retrying across its local
-      // create-then-write commit window), discard own build
-      deleteRec(dataDir)
-      var adopted: Option[String] = None
-      var tries = 0
-      while (adopted.isEmpty && tries < 50) {
-        adopted = resolve()
-        if (adopted.isEmpty) { Thread.sleep(100); tries += 1 }
-      }
-      adopted.getOrElse(throw new IllegalStateException(
-        s"concurrent publish of $key: conditional put rejected but " +
-          s"the winning artifact never became adoptable at $ptr — " +
-          "crashed publisher? delete the pointer to re-publish"))
-    }
   }
 
   /** Shared `_meta.json` read for artifact dirs — the ONE loud-on-
@@ -1124,10 +982,9 @@ private[graft] object Warehouse {
     * `<dir>/_writer.lock`, which DIES WITH A CRASHED HOLDER'S JVM
     * (the RunLock property) — no stale-lock recovery protocol needed.
     * The lock file lives under the POSIX-checked warehouse root
-    * ([[indexRoot]] rejects raw object-store schemes in BOTH commit
-    * protocols), so advisory locks hold in marker mode too; an
-    * object-store deployment that drops the POSIX mount must swap
-    * this for its store's lease primitive. */
+    * ([[indexRoot]] rejects raw object-store schemes), so advisory
+    * locks hold; an object-store deployment that drops the POSIX
+    * mount must swap this for its store's lease primitive. */
   private object WriterLocks {
     final class Holder(val thread: Thread,
         val ch: java.nio.channels.FileChannel,
@@ -1267,81 +1124,6 @@ private[graft] object Warehouse {
       java.nio.file.Files.copy(src.toPath, dst.toPath)
     }
 
-  /** Record last use as a marker OBJECT (the only channel the marker
-    * protocol has — no directory mtimes on an object store). */
-  private def writeLastUse(dir: java.io.File): Unit =
-    try {
-      val w = new java.io.PrintWriter(
-        new java.io.File(dir, "_GRAFT_LASTUSE"), "UTF-8")
-      try w.print(System.currentTimeMillis().toString)
-      finally w.close()
-    } catch { case _: java.io.IOException =>
-      System.err.println(s"[pairidx] WARNING: cannot record last " +
-        s"use of $dir; it may be swept while live")
-    }
-
-  /** Marker-mode sweep, mirroring [[sweepOrphans]]'s reclamation
-    * guarantee: (a) same-family POINTERS (≠ the one just published)
-    * whose target's last use is past the age cutoff are deleted
-    * together with their data prefix — every corpus rewrite mints a
-    * new sha, so without this, superseded pointer+prefix pairs
-    * accumulate forever (round-16 review); (b) same-family data
-    * prefixes referenced by NO surviving pointer (crashed publishes,
-    * losers that died before cleanup) age out by the same rule. The
-    * `_GRAFT_LASTUSE` marker is the primary age channel with the dir
-    * mtime as the newest-wins fallback — a concurrent loser's build
-    * IN PROGRESS has no marker yet (lastModified 0 would look
-    * ancient) but its dir mtime is seconds old, and the winner's
-    * post-publish sweep must never delete a build out from under a
-    * still-writing racer (caught by the convergence spec under suite
-    * pressure). A store's native lifecycle/TTL keyed on the marker
-    * object is the production equivalent. */
-  private def sweepMarkerOrphans(spark: SparkSession,
-      root: java.io.File, family: String, keepData: String,
-      ptrName: String): Unit = {
-    val days = spark.conf.get("spark.graft.index.sweepAgeDays", "7").toDouble
-    if (days <= 0) return
-    val cutoff = System.currentTimeMillis() - (days * 86400000L).toLong
-    def lastUse(d: java.io.File): Long =
-      math.max(d.lastModified(),
-        new java.io.File(d, "_GRAFT_LASTUSE").lastModified())
-    // (a) aged sibling pointers: delete the pointer FIRST (no reader
-    // can adopt the prefix afterwards), then its data prefix
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith(s"$family-") &&
-        f.getName.endsWith(".ptr") && f.getName != ptrName)
-      .foreach { p =>
-        val src = scala.io.Source.fromFile(p, "UTF-8")
-        val target = try src.mkString.trim finally src.close()
-        val dir = new java.io.File(root, target)
-        if (target.nonEmpty && target != keepData && lastUse(dir) < cutoff) {
-          System.err.println(
-            s"[pairidx] sweeping stale (marker) ${p.getName} -> $target")
-          p.delete()
-          deleteRec(dir)
-        }
-      }
-    // (b) aged data prefixes no surviving pointer references
-    val referenced = Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isFile && f.getName.startsWith(s"$family-") &&
-        f.getName.endsWith(".ptr"))
-      .flatMap { p =>
-        val src = scala.io.Source.fromFile(p, "UTF-8")
-        try Some(src.mkString.trim).filter(_.nonEmpty)
-        finally src.close()
-      }.toSet + keepData
-    Option(root.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory)
-      .filter(d => d.getName.startsWith(s"$family-") &&
-        d.getName.contains("-data-") && !referenced(d.getName))
-      .filter(lastUse(_) < cutoff)
-      .foreach { d =>
-        System.err.println(
-          s"[pairidx] sweeping orphaned (marker) ${d.getName}")
-        deleteRec(d)
-      }
-  }
-
   /** Resolve `key` through the in-JVM cache. A cached path is NOT
     * trusted blindly (round-14 ADVICE): a JVM alive longer than
     * sweepAgeDays could hold a path a same-family publish in another
@@ -1352,16 +1134,10 @@ private[graft] object Warehouse {
     * exactly like a fresh JVM's. */
   private def cachedDir(spark: SparkSession, family: String,
       key: String)(build: String => Unit): String = {
-    def publish(): String =
-      if (protocol(spark) == "marker")
-        markerLoadOrBuild(spark, family, key)(build)
-      else loadOrBuild(spark, family, key)(build)
-    def touch(f: java.io.File): Unit =
-      if (protocol(spark) == "marker") writeLastUse(f)
-      else touchUsed(f)
+    def publish(): String = loadOrBuild(spark, family, key)(build)
     val dir = built.computeIfAbsent(key, _ => publish())
     val f = new java.io.File(dir)
-    if (usable(f, key)) { touch(f); dir }
+    if (usable(f, key)) { touchUsed(f); dir }
     else {
       // swept (or doctored) since this JVM cached it: rebuild through
       // the normal publish path

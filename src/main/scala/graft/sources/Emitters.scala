@@ -2,7 +2,7 @@ package graft.sources
 
 import graft.functions.TallyTypes
 import graft.functions.TallyTypes._
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Output edges with the reference's exact text-format semantics

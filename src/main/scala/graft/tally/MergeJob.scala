@@ -1,6 +1,7 @@
 package graft.tally
 
 import graft.operators.Cdc
+import graft.operators.Warehouse.deleteRec
 import graft.sources.TableSpec
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
@@ -35,21 +36,19 @@ final class ParquetWarehouse(spark: SparkSession, dir: String) extends Warehouse
   def read(table: String): DataFrame = spark.read.parquet(path(table))
   def exists(table: String): Boolean =
     new java.io.File(path(table)).exists()
+  /** Each swap step is a `Files.move`, which throws on failure: a
+    * failed swap fails the write before the old copy is deleted. */
   def write(table: String, df: DataFrame): Unit = {
-    val tmp = path(table) + ".tmp"
-    df.write.mode("overwrite").parquet(tmp)
+    val tmp = java.nio.file.Paths.get(path(table) + ".tmp")
+    df.write.mode("overwrite").parquet(tmp.toString)
     val target = new java.io.File(path(table))
     if (target.exists()) {
       val old = new java.io.File(path(table) + ".old")
       deleteRec(old)
-      target.renameTo(old)
-      new java.io.File(tmp).renameTo(target)
+      java.nio.file.Files.move(target.toPath, old.toPath)
+      java.nio.file.Files.move(tmp, target.toPath)
       deleteRec(old)
-    } else new java.io.File(tmp).renameTo(target)
-  }
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) f.listFiles().foreach(deleteRec)
-    if (f.exists()) f.delete()
+    } else java.nio.file.Files.move(tmp, target.toPath)
   }
 }
 
@@ -143,12 +142,6 @@ final class PartitionedParquetWarehouse(spark: SparkSession, dir: String,
       .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
         f.getName.drop(1).toLong < keepFrom)
       .foreach(deleteRec)
-  }
-
-  private def deleteRec(f: java.io.File): Unit = {
-    if (f.isDirectory) Option(f.listFiles()).getOrElse(Array.empty)
-      .foreach(deleteRec)
-    f.delete()
   }
 
   /** Hard-link `src`'s tree under `dst` — carries an untouched
@@ -474,7 +467,10 @@ private final class TickView(warehouse: Warehouse) {
   * a driver polling loop with the watermark short-circuit — not a
   * streaming job, faithfully a batch poll (the reference's
   * "continuous" mode is setInterval). Runs `maxIterations` ticks (or
-  * forever when negative), skipping when nothing changed. */
+  * forever when negative), skipping when nothing changed. A tick that
+  * throws ends the loop with its exception: an HTTP failure, or
+  * Tally with no open company (the user closed it), which
+  * [[XmlTallySource]] refuses rather than merging empty collections. */
 object ContinuousSync {
   def run(job: () => SyncReport, intervalMillis: Long,
       maxIterations: Int, sleep: Long => Unit = Thread.sleep):

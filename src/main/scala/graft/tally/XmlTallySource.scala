@@ -32,10 +32,16 @@ final class XmlTallySource(spark: SparkSession,
     voucherSpec: Option[TableSpec] = None) extends TallySource {
 
   // one probe per sync, like the reference's single updateLastAlterId
-  // call at the top of the incremental run (src/tally.mts:113)
+  // call at the top of the incremental run (src/tally.mts:113). An
+  // empty probe means no company is open: every extract would come
+  // back empty too, and merging that would delete every stored row,
+  // so the tick fails here, before the merge stages anything
   private lazy val alterIds: (Long, Long) =
     TallyXml.parseAlterIds(transport(TallyXml.alterIdProbeTdl(company)))
-      .getOrElse((0L, 0L))
+      .getOrElse(throw new IllegalStateException(
+        s"Tally has no open company ${company.fold("")(c => s"'$c' ")}" +
+          "(the AlterId probe came back empty); open it in Tally " +
+          "and sync again"))
 
   def lastAlterIdMaster: Long = alterIds._1
   def lastAlterIdTransaction: Long = alterIds._2

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.TallyTypes._
 import graft.sources.{SpecLoader, TallyXml}
 import org.apache.spark.sql.types.{DateType, DecimalType}
 import org.scalatest.funsuite.AnyFunSuite

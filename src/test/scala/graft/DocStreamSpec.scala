@@ -281,7 +281,7 @@ class DocStreamSpec extends AnyFunSuite {
     // filter used to be pushed under the fan-out with the whole
     // expression substituted in, re-serializing every micro-batch)
     val docs = Tables.documents(spark, SparkTestSession.sf)
-    import org.apache.spark.sql.functions.{col, explode, md5, substring}
+    import org.apache.spark.sql.functions.{col, md5, substring}
     val existing = docs.filter(substring(md5(col("text")), 1, 1) < "c")
     val incoming = docs.filter(substring(md5(col("text")), 1, 1) >= "c")
     val ex = DocStream.nearDupAgainstIndex(

@@ -197,6 +197,25 @@ class IncrementalSyncCliSpec extends AnyFunSuite {
       }
   }
 
+  test("a tick against Tally with no open company fails and keeps every table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-closed").toString
+    writeSpec(dir)
+    val fake = new FakeTally
+    v1(fake)
+    Main.run(spark, cfg(dir), transportOverride = Some(fake.transport))
+    val tables = Seq("mst_ledger", "mst_vouchertype", "trn_voucher",
+      "trn_accounting")
+    val wh = new PartitionedParquetWarehouse(spark, s"$dir/wh")
+    val before = tables.map(t => t -> sorted(wh.read(t))).toMap
+    // a closed company answers every report, the probe included, empty
+    val e = intercept[IllegalStateException](
+      Main.run(spark, cfg(dir), transportOverride = Some(_ => "")))
+    assert(e.getMessage.contains("no open company"), e.getMessage)
+    tables.foreach { t =>
+      assert(sorted(wh.read(t)) == before(t), s"table $t changed")
+    }
+  }
+
   test("incremental sync refuses replay mode and writes nothing") {
     val dir = java.nio.file.Files.createTempDirectory("graft-replay").toString
     writeSpec(dir)

@@ -881,76 +881,41 @@ class IndexPathSpec extends AnyFunSuite {
     } finally spark.conf.unset("spark.graft.index.dir")
   }
 
-  test("marker commit protocol: publish/reuse without rename, concurrent " +
-    "publishers converge on one artifact, bad protocol rejected") {
-    // round-15 verdict #7: the documented conditional-put protocol as
-    // a real code path. Local createNewFile stands in for the store's
-    // put-if-absent; no rename, no flock, no dir mtime is touched on
-    // the publish path.
-    withTempDir("marker_wh") { root =>
+  test("a publisher that loses the race adopts the winner's artifact") {
+    // Another JVM building the same key publishes first: by the time
+    // this builder takes the publish lock, a completed, key-verified
+    // artifact sits at the final name. The loser must serve the
+    // winner's rows and drop its own staging dir, never replace a
+    // live artifact that readers may already hold.
+    withTempDir("adopt_wh") { root =>
       try {
         spark.conf.set("spark.graft.index.dir", s"$root/graft_pairs")
-        spark.conf.set("spark.graft.index.commitProtocol", "marker")
         graft.operators.SharedPairs.reset()
-        val first = graft.operators.SharedPairs
-          .textNearDupPairs(spark, sf)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(first.nonEmpty)
-        val wh = new java.io.File(s"$root/graft_pairs")
-        val ptrs = wh.listFiles().filter(_.getName.endsWith(".ptr"))
-        assert(ptrs.length == 1, "expected exactly one pointer object")
-        val dataDirs = wh.listFiles()
-          .filter(d => d.isDirectory && d.getName.contains("-data-"))
-        assert(dataDirs.length == 1, "expected exactly one data prefix")
-        // reuse across a "fresh JVM": resolved through the pointer,
-        // no rebuild (the data prefix name is UUID-unique, so a
-        // rebuild would mint a second one)
-        graft.operators.SharedPairs.reset()
-        val second = graft.operators.SharedPairs
-          .textNearDupPairs(spark, sf)
-          .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-        assert(second == first)
-        assert(wh.listFiles().count(d =>
-          d.isDirectory && d.getName.contains("-data-")) == 1,
-          "reuse minted a second data prefix (rebuild instead of adopt)")
-
-        // CONCURRENT publish of one key (two builders racing, as two
-        // JVMs would): exactly one wins the conditional put, the
-        // loser deletes its own build and adopts the winner
         import spark.implicits._
-        val key = "race-key-1"
-        val gate = new java.util.concurrent.CountDownLatch(2)
-        def build(tag: String)(d: String): Unit = {
-          gate.countDown()
-          gate.await() // both builders stage simultaneously
-          Seq((tag, 1)).toDF("who", "v").write.parquet(s"$d/pairs.parquet")
+        val key = "race-key-adopt"
+        var winner: java.io.File = null
+        val dir = graft.operators.Warehouse.materializedDir(spark, "race",
+            key) { d =>
+          // staging is `.build-<final name>-<uuid>` next to the final dir
+          val staging = new java.io.File(d)
+          winner = new java.io.File(staging.getParentFile,
+            staging.getName.stripPrefix(".build-").dropRight(37))
+          Seq(("winner", 1)).toDF("who", "v")
+            .write.parquet(s"$winner/pairs.parquet")
+          java.nio.file.Files.writeString(
+            new java.io.File(winner, "_graft_key.txt").toPath, key)
+          new java.io.File(winner, "_GRAFT_OK").createNewFile()
+          Seq(("loser", 2)).toDF("who", "v").write.parquet(s"$d/pairs.parquet")
         }
-        val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-        try {
-          val fa = pool.submit(() => graft.operators.Warehouse
-            .markerLoadOrBuild(spark, "race", key)(build("a")))
-          val fb = pool.submit(() => graft.operators.Warehouse
-            .markerLoadOrBuild(spark, "race", key)(build("b")))
-          val (da, db) = (fa.get(), fb.get())
-          assert(da == db, s"publishers diverged: $da vs $db")
-          val raceData = wh.listFiles().filter(d =>
-            d.isDirectory && d.getName.startsWith("race-"))
-          assert(raceData.length == 1,
-            s"loser's data prefix not cleaned: ${raceData.map(_.getName).toSeq}")
-          val rows = spark.read.parquet(s"$da/pairs.parquet").count()
-          assert(rows == 1, s"mixed part files from two builders: $rows rows")
-        } finally pool.shutdown()
-
-        // a bogus protocol value fails loudly at resolve time
-        spark.conf.set("spark.graft.index.commitProtocol", "s3-magic")
-        graft.operators.SharedPairs.reset()
-        val err = intercept[IllegalArgumentException] {
-          graft.operators.SharedPairs.textNearDupPairs(spark, sf).collect()
-        }
-        assert(err.getMessage.contains("commitProtocol"))
+        assert(dir == winner.toString, s"served $dir, not the winner $winner")
+        val who = spark.read.parquet(s"$dir/pairs.parquet")
+          .collect().map(_.getString(0)).toSeq
+        assert(who == Seq("winner"), s"rows of $who")
+        val staged = new java.io.File(s"$root/graft_pairs").list()
+          .filter(_.startsWith(".build-"))
+        assert(staged.isEmpty, s"loser's staging dir left: ${staged.toSeq}")
       } finally {
         spark.conf.unset("spark.graft.index.dir")
-        spark.conf.unset("spark.graft.index.commitProtocol")
         graft.operators.SharedPairs.reset()
       }
     }

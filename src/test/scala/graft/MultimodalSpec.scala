@@ -1,7 +1,6 @@
 package graft
 
 import graft.operators.Multimodal
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 class MultimodalSpec extends AnyFunSuite {

@@ -66,7 +66,6 @@ class ScaleContractSpec extends AnyFunSuite {
   test("sign-flip replica regime (r >= 32) is orthogonal: norms and " +
     "within-replica cosines preserved exactly, cross-replica decorrelated") {
     import spark.implicits._
-    import org.apache.spark.sql.functions._
     // the 100x regime composes rotation with a half-coordinate sign
     // flip; both are orthogonal, so replica 33's internal geometry
     // must be congruent to the original's to the last ulp

@@ -1,6 +1,5 @@
 package graft
 
-import graft.functions.TallyTypes
 import graft.functions.TallyTypes._
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
