@@ -16,13 +16,17 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *
   * Supported flags (reference-compatible subset):
   *   --tally-server / --tally-port / --tally-company
-  *   --tally-fromdate / --tally-todate  (yyyyMMdd or auto)
+  *   --tally-fromdate / --tally-todate  (yyyyMMdd. The reference's
+  *                           `auto`, the company's own period, is not
+  *                           resolved yet: it reaches Tally verbatim —
+  *                           ROADMAP Direction G)
   *   --tally-master / --tally-transaction  (true|false)
   *   --tally-truncate       (false = append to existing tables — the
   *                           reference's year-by-year full-sync
   *                           pattern, docs/commandline-options.md
   *                           scenario 04)
-  *   --database-technology  (parquet|csv|json)
+  *   --database-technology  (parquet|csv|json|orc: one directory of
+  *                           part files per table under the schema)
   *   --database-schema      (output directory)
   *   --graft-definition     (YAML spec path)
   *   --graft-replay         (dir of <table>.data TSV files instead of

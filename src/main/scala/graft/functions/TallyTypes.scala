@@ -87,61 +87,6 @@ object TallyTypes {
           .try_cast(DecimalType(15, 4)))
   }
 
-  /** Extract-side sign resolution for amounts ($$IsDebit → negate,
-    * P8): debit negative, credit positive. */
-  def amountSigned(value: Column, isDebit: Column): Column =
-    when(isDebit, -abs(value)).otherwise(abs(value))
-      .cast(DecimalType(17, 2))
-
-  /** Extract-side sign resolution for quantities ($$IsInwards, P9):
-    * inward positive, outward negative. */
-  def quantitySigned(qty: Column, isInward: Column): Column =
-    when(isInward, abs(qty)).otherwise(-abs(qty))
-      .cast(DecimalType(15, 4))
-
-  /** Emit-side: typed column back to the reference's text form (date
-    * null → ñ sentinel, boolean → 1/0) — used by the TSV/CSV edges. */
-  def emitValue(c: Column, t: FieldType): Column = t match {
-    case TDate => coalesce(date_format(c, "yyyy-MM-dd"),
-      lit(NullDateSentinel))
-    case TLogical => when(c, "1").when(!c, "0").otherwise("")
-    case _ => coalesce(c.cast(StringType), lit(""))
-  }
-
-  /** The reference's quirky rounding (src/utility.mts:158-166): the
-    * fraction must EXCEED 0.5 to round away from zero — i.e.
-    * round-half-down toward zero, not banker's and not half-up.
-    * Faithfully reproduced (and property-tested) because report
-    * parity depends on it. */
-  def tallyRound(value: Column, precision: Int): Column = {
-    val p = pow(lit(10.0), lit(precision))
-    val scaled = value * p
-    // trunc toward zero (negatives never round away — reference quirk).
-    // x − (x mod 1.0) IS Math.trunc in the double domain (mod keeps the
-    // dividend's sign; ≥ 2^53 the mod is 0 and trunc = identity, like
-    // JS). floor()/ceil() here would be WRONG: Spark's return BIGINT,
-    // which under ANSI mode overflows for |value|·10^p > 2^63 — values
-    // inside decimal(17,2)'s range at precision 4 already hit it
-    // (caught by the TallyTypesSpec property sweep).
-    val tz = scaled - (scaled % lit(1.0))
-    when(scaled - tz > 0.5, (tz + 1) / p).otherwise(tz / p)
-  }
-
-  /** List flatten (P13, `$$FullList:Address:$Address` — collapse a
-    * child collection to one string, tally-export-config.yaml:65). */
-  def fullList(arr: Column, sep: String = " "): Column =
-    array_join(arr, sep)
-
-  /** Indexed child access (P14, `$Led...[Last]` / `[First]` /
-    * `[n]`, tally-export-config.yaml:83, 296): 1-based from the
-    * front, -1 = last. */
-  def indexedChild(arr: Column, index: Int): Column =
-    element_at(arr, index)
-
-  /** Compose a yyyymmdd int from a date (P11, src/tally.mts:565). */
-  def yyyymmdd(d: Column): Column =
-    (year(d) * 10000 + month(d) * 100 + dayofmonth(d)).cast(IntegerType)
-
   /** XML entity escape for the request edge (P18,
     * src/utility.mts:48-55). */
   def escapeXml(s: String): String =

@@ -79,68 +79,6 @@ case class CosineSimilarityExpr(left: Expression, right: Expression)
     copy(left = newLeft, right = newRight)
 }
 
-/** Squared L2 distance between two float arrays in one allocation-free
-  * codegen loop — the PQ assignment metric
-  * ([[graft.operators.Similarity]]'s per-subspace k-means): training
-  * evaluates it corpus × m × ks times per Lloyd round, which as a
-  * `zip_with`+`aggregate` HOF paid the interpreted-lambda machinery
-  * this repo measured at ~200× a native loop (q131's clustered build
-  * was the visible cost). Interpreted and generated paths accumulate
-  * in the same index order — bit-identical doubles. */
-case class L2SquaredExpr(left: Expression, right: Expression)
-    extends BinaryExpression {
-
-  override def dataType: DataType = DoubleType
-  override def prettyName: String = "l2_squared"
-
-  override def checkInputDataTypes(): TypeCheckResult = {
-    def ok(dt: DataType): Boolean = dt match {
-      case ArrayType(FloatType, _) => true
-      case _ => false
-    }
-    if (ok(left.dataType) && ok(right.dataType))
-      TypeCheckResult.TypeCheckSuccess
-    else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName requires two ARRAY<FLOAT> arguments, " +
-        s"got ${left.dataType} and ${right.dataType}")
-  }
-
-  override def nullSafeEval(a: Any, b: Any): Any = {
-    val x = a.asInstanceOf[ArrayData]
-    val y = b.asInstanceOf[ArrayData]
-    val n = math.min(x.numElements(), y.numElements())
-    var acc = 0.0
-    var i = 0
-    while (i < n) {
-      val d = x.getFloat(i).toDouble - y.getFloat(i).toDouble
-      acc += d * d
-      i += 1
-    }
-    acc
-  }
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i")
-      val n = ctx.freshName("n")
-      val acc = ctx.freshName("acc")
-      val d = ctx.freshName("d")
-      s"""
-         |int $n = java.lang.Math.min($a.numElements(), $b.numElements());
-         |double $acc = 0.0;
-         |for (int $i = 0; $i < $n; $i++) {
-         |  double $d = (double) $a.getFloat($i) - (double) $b.getFloat($i);
-         |  $acc += $d * $d;
-         |}
-         |${ev.value} = $acc;
-       """.stripMargin
-    })
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): Expression =
-    copy(left = newLeft, right = newRight)
-}
-
 /** All `tables` salted LSH sign-pattern keys of a vector in ONE fused
   * loop — replaces the posexplode → (planes×tables)-buffer hash
   * aggregate formulation, which cost a full shuffle of dims rows per
@@ -374,8 +312,8 @@ case class NearestListsExpr(child: Expression, listIds: Array[Int],
   * corpus × m rows — the dominant CPU of every PQ Lloyd round and of
   * the one-time encode (q130/q131 measured 30-40 s of task time per
   * pass at sf0.1). Books are m × ks rows by construction (bounded,
-  * exactly what the old plan broadcast); the L2 accumulates in the
-  * SAME index order as [[L2SquaredExpr]] (bit-identical doubles),
+  * exactly what the old plan broadcast); the L2 accumulates in
+  * ascending index order (bit-identical doubles across runs),
   * `java.lang.Double.compare` matches the SQL sort (d2 is a
   * non-negative sum, so −0.0 cannot arise; NaN greatest), and
   * entries iterate in ascending c with a strict comparison — the old
@@ -445,11 +383,6 @@ object VectorExpressions {
   /** Column wrapper for the fused cosine kernel. */
   def cosineSimilarity(a: Column, b: Column): Column =
     ColumnBridge.column(CosineSimilarityExpr(
-      ColumnBridge.expression(a), ColumnBridge.expression(b)))
-
-  /** Column wrapper for the fused squared-L2 kernel. */
-  def l2Squared(a: Column, b: Column): Column =
-    ColumnBridge.column(L2SquaredExpr(
       ColumnBridge.expression(a), ColumnBridge.expression(b)))
 
   /** splitmix64 finalizer — deterministic, engine-independent plane

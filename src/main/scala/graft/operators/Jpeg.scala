@@ -174,9 +174,6 @@ object JpegCodec {
   private final class BitReader(data: Array[Byte], var pos: Int) {
     private var acc = 0L
     private var nbits = 0
-    def atMarker: Boolean =
-      nbits == 0 && pos + 1 < data.length &&
-        (data(pos) & 0xFF) == 0xFF && (data(pos + 1) & 0xFF) != 0x00
     /** Byte-align and return position (for restart handling). */
     def align(): Unit = { acc = 0L; nbits = 0 }
     private def fill(): Unit = {

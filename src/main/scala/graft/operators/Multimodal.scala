@@ -693,10 +693,6 @@ object Multimodal {
       }
   }
 
-  /** Image-level EXACT dedup row: payloads grouped by a digest of the
-    * DECODED pixels. */
-  final case class ImageDupGroup(keeper: Long, n_copies: Long)
-
   /** Pixel law for the image-dedup corpus ([[SynthBmp]]'s law keyed
     * on `d mod 40` instead of d, so exact duplicate IMAGES exist:
     * every congruence class shares one image rendered into distinct
@@ -710,12 +706,8 @@ object Multimodal {
       ((k * 7 + x * 3 + y * 5) % 256).toInt,
       ((k * 7 + x * 3 + y * 5 + 11) % 256).toInt,
       ((k * 7 + x * 3 + y * 5 + 22) % 256).toInt)
-    def bytes(docId: Long): Array[Byte] = {
-      val k = key(docId); val (w, h) = dims(k)
-      BmpCodec.encode(w, h, px(k))
-    }
-    /** Same image rendered as a PNG — the compressed-container twin
-      * (identical pixels ⇒ identical [[PngCodec.pixelDigest]]). */
+    /** The image rendered as a PNG (identical pixels ⇒ identical
+      * [[PngCodec.pixelDigest]]). */
     def bytesPng(docId: Long): Array[Byte] = {
       val k = key(docId); val (w, h) = dims(k)
       PngCodec.encode(w, h, px(k))
@@ -763,7 +755,7 @@ object Multimodal {
     * SQL oracle can recompute it. Width and height must be multiples
     * of 8 so blocks partition the image exactly (a general
     * implementation resamples first; resampling belongs to the codec
-    * layer, see [[resizeDims]]). */
+    * layer, see [[resizeHalfBox]]). */
   def aHash(docId: Long, bytes: Array[Byte]): Long = {
     val (w, h, px) = BmpCodec.decodePixels(docId, bytes)
     aHashPixels(docId, w, h, px)
@@ -1162,9 +1154,9 @@ object Multimodal {
   /** REAL pixel resample — box-filtered half-scale downsample over a
     * decoded RGB plane set: output pixel (i, j) is the rounded mean
     * of the 2×2 (edge: 1×2 / 2×1 / 1×1) input box it covers. This is
-    * the codec-level resample that [[resizeDims]]' dimension algebra
-    * plugs into; integer box sums keep it exactly recomputable by
-    * the SQL oracle (q108), unlike fractional-weight bilinear. */
+    * the codec-level resample; integer box sums keep it exactly
+    * recomputable by the SQL oracle (q108), unlike fractional-weight
+    * bilinear. */
   def resizeHalfBox(w: Int, h: Int,
       px: (Int, Int) => (Int, Int, Int)): (Int, Int, (Int, Int) => (Int, Int, Int)) = {
     val ow = (w + 1) / 2
@@ -1238,8 +1230,7 @@ object Multimodal {
     * recomputes the sampled-frame luma mean from the law, so a
     * hash-green gate proves the sampler keeps exactly frames
     * 0, stride, 2·stride … — an off-by-one or an all-frames fallback
-    * shifts the mean. [[frameSample]] remains the byte-level window
-    * shape for opaque payloads; this is its decoded-pixel twin. */
+    * shifts the mean. */
   def frameSampleFeatures(spark: SparkSession, docs: DataFrame,
       idCol: String, stride: Int = 2): Dataset[FrameSampleFeature] = {
     require(stride > 0, s"stride must be positive, got $stride")

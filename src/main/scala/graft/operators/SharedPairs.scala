@@ -54,11 +54,6 @@ object SharedPairs {
   /** Test-only: drop the in-JVM artifact map — see [[Warehouse.reset]]. */
   private[graft] def reset(): Unit = Warehouse.reset()
 
-  /** See [[Warehouse.indexRoot]] (kept as the historical entry point
-    * for the pair family's callers and specs). */
-  private[graft] def indexRoot(spark: SparkSession): String =
-    Warehouse.indexRoot(spark)
-
   /** The τ = 0.8 trigram MinHash self-pair set over `documents`
     * (q22's recall-1 banding regime) — (a, b, jaccard), a < b.
     * Shared by q68 / q71 / q72 / q78 / q98 / q23. */

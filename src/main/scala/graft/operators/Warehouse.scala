@@ -652,35 +652,6 @@ private[graft] object Warehouse {
           "rows under the same id; purge first")
     }
 
-  /** Delete partition directories under `path` whose value is not in
-    * `live` — the shared tail of every dynamic-overwrite rewrite that
-    * can EMPTY a partition (dynamic overwrite never touches
-    * partitions absent from the writeout, so their stale files must
-    * go explicitly; hand-copied three times before this helper —
-    * round-18 review). `restrictTo` limits the sweep to a candidate
-    * value set (the delete path must never touch partitions it did
-    * not rewrite). Bounded driver work: partition values here are
-    * ≤ 36 one-char prefixes. */
-  private[graft] def deleteStalePartitionDirs(path: String,
-      partitionCol: String, live: Set[String],
-      restrictTo: Option[Set[String]] = None): Unit =
-    Option(new java.io.File(path).listFiles())
-      .getOrElse(Array.empty[java.io.File])
-      .filter(d => d.isDirectory &&
-        d.getName.startsWith(s"$partitionCol="))
-      .filter { d =>
-        // directory names carry Spark's partition-path ESCAPING
-        // (spaces, '%', '=' arrive percent-encoded), while `live` and
-        // `restrictTo` hold raw partition VALUES from collect() —
-        // compare in value space or a value containing an escaped
-        // char would never match `live` and its freshly rewritten
-        // directory would be deleted (round-18 ADVICE)
-        val v = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .unescapePathName(d.getName.stripPrefix(s"$partitionCol="))
-        !live(v) && restrictTo.forall(_(v))
-      }
-      .foreach(deleteRec)
-
   // ── epoch-manifest snapshot layer (round-19 verdict #1; extended
   //    to INGEST round-20 — round-19 verdict #1 again, one rung up) ──
   //
@@ -986,9 +957,7 @@ private[graft] object Warehouse {
     * locks hold; an object-store deployment that drops the POSIX
     * mount must swap this for its store's lease primitive. */
   private object WriterLocks {
-    final class Holder(val thread: Thread,
-        val ch: java.nio.channels.FileChannel,
-        val lock: java.nio.channels.FileLock) {
+    final class Holder(val thread: Thread) {
       var count: Int = 1
     }
     val held = new java.util.concurrent.ConcurrentHashMap[String, Holder]()
@@ -1017,7 +986,7 @@ private[graft] object Warehouse {
           ch.close(); refuse()
         }
       if (lock == null) { ch.close(); refuse() }
-      val h = new WriterLocks.Holder(Thread.currentThread(), ch, lock)
+      val h = new WriterLocks.Holder(Thread.currentThread())
       if (WriterLocks.held.putIfAbsent(key, h) != null) {
         lock.release(); ch.close(); refuse()
       }
@@ -1030,8 +999,8 @@ private[graft] object Warehouse {
   }
 
   /** One atomic multi-entry mutation of the index at `dir`: stage
-    * segment appends, wholesale table/file replacements, and drops,
-    * then [[commit]] them as ONE manifest swap. THE ingest-cycle
+    * segment appends and sidecar-file replacements, then [[commit]]
+    * them as ONE manifest swap. THE ingest-cycle
     * primitive (round-20): a BM25 append stages postings + dfs + ids
     * segments and the meta replacement, and a concurrent reader sees
     * the whole cycle or none of it. Crash before commit leaves
@@ -1064,31 +1033,12 @@ private[graft] object Warehouse {
       }
     }
 
-    /** Stage a wholesale replacement of `table` with `rows` as its
-      * single new segment. */
-    def replaceTable(table: String, rows: DataFrame,
-        partitionCols: Seq[String] = Nil): Unit = {
-      val name = epochDirName(table)
-      val w = rows.write
-      (if (partitionCols.nonEmpty) w.partitionBy(partitionCols: _*)
-       else w).parquet(s"$dir/$name")
-      next += table -> Seq(name)
-      touched = true
-    }
-
     /** Stage a replacement of sidecar FILE `name` (meta json, sketch
       * bytes): `write` receives the fresh epoch-named target. */
     def replaceFile(name: String)(write: java.io.File => Unit): Unit = {
       val n = epochDirName(name)
       write(new java.io.File(dir, n))
       next += name -> Seq(n)
-      touched = true
-    }
-
-    /** Stage dropping `table` from the layout (its dirs grace-linger
-      * and are swept by a later commit). */
-    def drop(table: String): Unit = {
-      next -= table
       touched = true
     }
 

@@ -198,5 +198,4 @@ final class GraftServer(
   def start(): Unit = { server.start(); ws.start() }
   def stop(): Unit = { server.stop(0); ws.stop() }
   def boundPort: Int = server.getAddress.getPort
-  def boundWsPort: Int = ws.boundPort
 }

@@ -28,12 +28,4 @@ object Derived {
       (parentCols.map(col) ++
         childFields.map(f => col(s"__child.$f").as(f))): _*)
   }
-
-  /** Two-level descent (e.g. voucher → inventory entries → batch
-    * allocations): explode twice, parents carried all the way. */
-  def explodeView2(df: DataFrame, outerArray: String, innerArray: String,
-      parentCols: Seq[String]): DataFrame = {
-    val lvl1 = explodeView(df, outerArray, parentCols)
-    explodeView(lvl1, innerArray, parentCols)
-  }
 }

@@ -6,7 +6,8 @@ import java.nio.charset.StandardCharsets
 import java.time.Duration
 
 /** Live Tally HTTP transport (SURVEY §2.1 S1): POST the TDL envelope
-  * to Tally's XML server and return the response body. Tally speaks
+  * to Tally's XML server and return the response body; a non-2xx
+  * answer throws with its status code. Tally speaks
   * UTF-16LE on both request and response
   * (reference src/tally.mts:448-490).
   *
@@ -31,6 +32,11 @@ final class TallyHttp(server: String = "localhost", port: Int = 9000,
       .build()
     val resp = client.send(req,
       HttpResponse.BodyHandlers.ofByteArray())
+    // an error page carries no rows: read as data, it would empty a
+    // full-sync table or mark every stored key of a tick deleted
+    if (resp.statusCode / 100 != 2)
+      throw new java.io.IOException(
+        s"Tally at $server:$port answered HTTP ${resp.statusCode}")
     new String(resp.body(), StandardCharsets.UTF_16LE)
   }
 

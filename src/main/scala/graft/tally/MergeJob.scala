@@ -59,7 +59,10 @@ final class ParquetWarehouse(spark: SparkSession, dir: String) extends Warehouse
   * the new snapshot as hard links (same inodes, zero data copy), so
   * their files are never rewritten (SURVEY §7.1's "partition-overwrite
   * semantics"; a full sync still rewrites whole tables through
-  * [[write]]). Tables lacking the key column (pure dims like
+  * [[write]]). k affected keys touch an expected share
+  * 1 − (1 − 1/`buckets`)^k of the buckets, so a rewrite's I/O is
+  * proportional to the change only while k is small against
+  * `buckets`. Tables lacking the key column (pure dims like
   * mst_vouchertype) store unpartitioned and fall back to full rewrite.
   * Both [[write]] and [[rewritePartitions]] exchange rows on the
   * bucket id before the partitioned write, so every `_pt=<bucket>`
@@ -82,7 +85,10 @@ final class ParquetWarehouse(spark: SparkSession, dir: String) extends Warehouse
   * snapshot, never a torn mix or a vanished file (the failure mode of
   * in-place dynamic partition overwrite). Retention: the previous
   * version is kept so in-flight reads of the prior snapshot finish;
-  * older versions are garbage-collected at publish. A read plan held
+  * older versions are garbage-collected at publish. A table that a
+  * full sync wrote flat (no `CURRENT`) counts as the version before
+  * `v0`, so at the default retention its files are deleted when `v1`
+  * publishes. A read plan held
   * across TWO subsequent commits can lose its files — re-resolve
   * [[read]] per query (the reference's loader has the same contract:
   * its target database snapshots per-statement,
@@ -136,11 +142,15 @@ final class PartitionedParquetWarehouse(spark: SparkSession, dir: String,
     java.nio.file.Files.move(tmp.toPath, pointer(t).toPath,
       java.nio.file.StandardCopyOption.ATOMIC_MOVE,
       java.nio.file.StandardCopyOption.REPLACE_EXISTING)
-    // keep v (live) plus retainVersions-1 predecessors; drop older
+    // keep v (live) plus retainVersions-1 predecessors; drop older.
+    // A table a full sync wrote flat (part files, _SUCCESS, .crc) is
+    // the version before v0
     val keepFrom = v.drop(1).toLong - (retainVersions - 1L)
+    def version(f: java.io.File): Long =
+      if (f.isDirectory && f.getName.matches("v\\d+")) f.getName.drop(1).toLong
+      else -1L
     Option(tableDir(t).listFiles()).getOrElse(Array.empty)
-      .filter(f => f.isDirectory && f.getName.matches("v\\d+") &&
-        f.getName.drop(1).toLong < keepFrom)
+      .filter(f => !f.getName.startsWith("CURRENT") && version(f) < keepFrom)
       .foreach(deleteRec)
   }
 
@@ -207,16 +217,6 @@ final class PartitionedParquetWarehouse(spark: SparkSession, dir: String,
   }
 }
 
-final class MemoryWarehouse extends Warehouse {
-  private val tables = scala.collection.mutable.Map[String, DataFrame]()
-  def read(table: String): DataFrame = tables(table)
-  def exists(table: String): Boolean = tables.contains(table)
-  def write(table: String, df: DataFrame): Unit =
-    // localCheckpoint: materialize so later writes of upstream tables
-    // can't change this snapshot through lazy lineage
-    tables(table) = df.localCheckpoint(eager = true)
-}
-
 /** What the merge pulls from Tally (SURVEY §2.1 S17/S18 + §2.3):
   * watermark probes, light (guid, alterid) diff snapshots, filtered
   * incremental row extracts, and the voucher-number re-pull. Tests
@@ -277,8 +277,11 @@ final case class SyncReport(
   * exchanges its rows on the bucket id so every bucket is written as
   * one file. A partition-capable warehouse
   * ([[PartitionedParquetWarehouse]]) replaces only the buckets a tick
-  * actually touches, so a tick's I/O scales with the CHANGE volume,
-  * not the table volume.
+  * actually touches. With k changed keys hashed over B buckets, the
+  * expected share of touched buckets is 1 − (1 − 1/B)^k, so a tick's
+  * I/O follows the change volume only while k is small against B: at
+  * B = 64, 10 keys touch about 15% of the buckets, 64 keys about 64%
+  * and 200 keys about 96%.
   */
 final class MergeJob(spark: SparkSession, masters: Seq[TableSpec],
     transactions: Seq[TableSpec], source: TallySource,

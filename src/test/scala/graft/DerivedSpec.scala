@@ -23,15 +23,6 @@ class DerivedSpec extends AnyFunSuite {
     assert(v1.map(_.getString(2)).toSet == Set("Widget", "Gadget"))
   }
 
-  test("two-level descent mirrors Voucher→Inventory→Batch") {
-    val df = Seq(("v1", Seq((("Widget"), Seq(("b1", 2.0), ("b2", 1.0))))))
-      .toDF("guid", "inv")
-      .withColumn("inv", col("inv").cast(
-        "array<struct<item:string,batches:array<struct<batch:string,qty:double>>>>"))
-    val flat = Derived.explodeView2(df, "inv", "batches", Seq("guid"))
-    assert(flat.columns.contains("batch") && flat.count() == 2)
-  }
-
   test("dedupedCorpus removes exact and near duplicates, keeps min ids") {
     val base = "alpha beta gamma delta epsilon zeta eta theta " +
       "iota kappa lambda mu nu xi omicron pi rho sigma tau upsilon"

@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.TallyTypes._
 import graft.sources.Emitters
+import graft.tally.ParquetWarehouse
 import org.scalatest.funsuite.AnyFunSuite
 
 class EmittersSpec extends AnyFunSuite {
@@ -12,64 +12,15 @@ class EmittersSpec extends AnyFunSuite {
     ("g1", """say "hi"""", 10, java.sql.Date.valueOf("2024-01-15")),
     ("g2", "plain", 0, null.asInstanceOf[java.sql.Date]))
     .toDF("guid", "narration", "qty", "d")
-  private val types = Seq(TText, TText, TNumber, TDate)
-
-  test("CSV: quotes doubled, text/date quoted, numbers bare") {
-    val lines = Emitters.csvLines(df, types).collect().map(_.getString(0))
-    assert(lines(0) == "\"g1\",\"say \"\"hi\"\"\",10,\"2024-01-15\"")
-  }
-
-  test("CSV: null date renders empty (sentinel stripped)") {
-    val lines = Emitters.csvLines(df, types).collect().map(_.getString(0))
-    assert(lines(1) == "\"g2\",\"plain\",0,\"\"")
-  }
-
-  test("CSV doubleQuote mode quotes everything") {
-    val lines = Emitters.csvLines(df, types, doubleQuote = true)
-      .collect().map(_.getString(0))
-    assert(lines(0).startsWith("\"g1\",\"say \"\"hi\"\"\",\"10\","))
-  }
-
-  test("file content has BOM + header + CRLF") {
-    val content = Emitters.csvFileContent(df, types)
-    assert(content.startsWith(Emitters.Bom))
-    assert(content.contains("\"guid\",\"narration\",\"qty\",\"d\"\r\n"))
-  }
 
   test("columnar dir sinks round-trip typed rows (parquet + orc)") {
     val dir = java.nio.file.Files.createTempDirectory("graft-emit").toString
-    Emitters.writeParquet(df, s"$dir/p")
+    new ParquetWarehouse(spark, dir).write("p", df)
     Emitters.writeOrcDir(df, s"$dir/o")
     assert(spark.read.parquet(s"$dir/p").count() == 2)
     val orc = spark.read.orc(s"$dir/o")
     assert(orc.count() == 2)
     assert(orc.schema("d").dataType ==
       org.apache.spark.sql.types.DateType)
-  }
-
-  test("JSON lines keep typed values and nulls") {
-    val rows = Emitters.jsonLines(df).collect().map(_.getString(0))
-    assert(rows(0).contains("\"qty\":10"))
-    assert(!rows(1).contains("\"d\":"))  // null dropped by to_json
-    val arr = Emitters.jsonFileContent(df)
-    assert(arr.startsWith(Emitters.Bom + "[") && arr.endsWith("]"))
-  }
-
-  test("single-file sinks fail fast above the row bound, pre-collect") {
-    val big = spark.range(10).toDF("guid")
-      .selectExpr("CAST(guid AS STRING) AS guid")
-    val eCsv = intercept[IllegalArgumentException] {
-      Emitters.csvFileContent(big, Seq(TText), maxRows = 5)
-    }
-    assert(eCsv.getMessage.contains("writeCsvDir"))
-    intercept[IllegalArgumentException] {
-      Emitters.jsonFileContent(big, maxRows = 5)
-    }
-    intercept[IllegalArgumentException] {
-      graft.sources.Sinks.dataFileContent(big, Seq(TText), maxRows = 5)
-    }
-    // at the bound (not above) the sink still works
-    assert(Emitters.csvFileContent(big, Seq(TText), maxRows = 10)
-      .contains("\r\n"))
   }
 }

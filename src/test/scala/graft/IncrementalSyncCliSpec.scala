@@ -1,6 +1,7 @@
 package graft
 
 import graft.tally.PartitionedParquetWarehouse
+import java.nio.charset.StandardCharsets
 import org.apache.spark.sql.DataFrame
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -111,6 +112,54 @@ class IncrementalSyncCliSpec extends AnyFunSuite {
           "Amount" -> "70.00")))
   }
 
+  /** After v2: lg1 renamed (its entry follows), v4 re-dated with a new
+    * amount. */
+  private def v3(fake: FakeTally): Unit = {
+    v2(fake)
+    fake.masterAlterId = 3L; fake.txnAlterId = 3L
+    def edit(collection: String)(
+        change: PartialFunction[String, Seq[(String, String)]]) =
+      collection -> fake.tables(collection)
+        .map(r => r ++ change.applyOrElse(r("Guid"), (_: String) => Nil))
+    fake.tables = fake.tables ++ Seq(
+      edit("Ledger") { case "lg1" => Seq("AlterId" -> "3", "Name" -> "Cash Box") },
+      edit("Voucher") { case "v4" => Seq("AlterId" -> "3", "Date" -> "2020-06-02") },
+      edit("Voucher.AllLedgerEntries") {
+        case "v1" => Seq("LedgerName" -> "Cash Box")
+        case "v4" => Seq("AlterId" -> "3", "Amount" -> "75.00")
+      })
+  }
+
+  /** Serves `fake` over loopback HTTP for the duration of `body`, so
+    * the sync runs the live [[graft.sources.TallyHttp]] transport. A
+    * request matching `fails` is answered with HTTP 500 and an empty
+    * envelope. Returns how many requests failed. */
+  private def served(fake: FakeTally, fails: String => Boolean)(
+      body: Int => Unit): Int = {
+    val failed = new java.util.concurrent.atomic.AtomicInteger
+    val server = com.sun.net.httpserver.HttpServer.create(
+      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    server.createContext("/", exchange => {
+      val request = new String(exchange.getRequestBody.readAllBytes(),
+        StandardCharsets.UTF_16LE)
+      val (status, answer) =
+        if (fails(request)) {
+          failed.incrementAndGet()
+          (500, "<ENVELOPE></ENVELOPE>")
+        } else (200, fake.transport(request))
+      val bytes = answer.getBytes(StandardCharsets.UTF_16LE)
+      exchange.sendResponseHeaders(status, bytes.length.toLong)
+      exchange.getResponseBody.write(bytes)
+      exchange.close()
+    })
+    server.start()
+    try body(server.getAddress.getPort) finally server.stop(0)
+    failed.get
+  }
+
+  private val tables = Seq("mst_ledger", "mst_vouchertype", "trn_voucher",
+    "trn_accounting")
+
   private def cfg(dir: String): Main.Config = Main.Config(
     technology = "parquet", schema = s"$dir/wh",
     definition = s"$dir/spec.yaml", syncMode = "incremental")
@@ -203,8 +252,6 @@ class IncrementalSyncCliSpec extends AnyFunSuite {
     val fake = new FakeTally
     v1(fake)
     Main.run(spark, cfg(dir), transportOverride = Some(fake.transport))
-    val tables = Seq("mst_ledger", "mst_vouchertype", "trn_voucher",
-      "trn_accounting")
     val wh = new PartitionedParquetWarehouse(spark, s"$dir/wh")
     val before = tables.map(t => t -> sorted(wh.read(t))).toMap
     // a closed company answers every report, the probe included, empty
@@ -213,6 +260,80 @@ class IncrementalSyncCliSpec extends AnyFunSuite {
     assert(e.getMessage.contains("no open company"), e.getMessage)
     tables.foreach { t =>
       assert(sorted(wh.read(t)) == before(t), s"table $t changed")
+    }
+  }
+
+  test("a tick that Tally answers with HTTP 500 fails and keeps every table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-500tick").toString
+    writeSpec(dir)
+    val fake = new FakeTally
+    v1(fake)
+    Main.run(spark, cfg(dir), transportOverride = Some(fake.transport))
+    val wh = new PartitionedParquetWarehouse(spark, s"$dir/wh")
+    val before = tables.map(t => t -> sorted(wh.read(t))).toMap
+    v2(fake)
+    // the ledger's (guid, alterid) diff snapshot; read as an empty
+    // snapshot, it would mark every stored ledger deleted
+    val failed = served(fake,
+        _.contains("<TYPE>Ledger</TYPE><FETCH>AlterId</FETCH>")) { port =>
+      val e = intercept[java.io.IOException](Main.run(spark,
+        cfg(dir).copy(server = "127.0.0.1", port = port)))
+      assert(e.getMessage.contains("HTTP 500"), e.getMessage)
+    }
+    assert(failed == 1)
+    tables.foreach { t =>
+      assert(sorted(wh.read(t)) == before(t), s"table $t changed")
+    }
+  }
+
+  test("a full sync that Tally answers with HTTP 500 fails and writes no empty table") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-500full").toString
+    writeSpec(dir)
+    val fake = new FakeTally
+    v1(fake)
+    val failed = served(fake, _.contains("<TYPE>Ledger</TYPE>")) { port =>
+      val e = intercept[java.io.IOException](Main.run(spark,
+        cfg(dir).copy(syncMode = "full", server = "127.0.0.1", port = port)))
+      assert(e.getMessage.contains("HTTP 500"), e.getMessage)
+    }
+    assert(failed == 1)
+    assert(!new java.io.File(s"$dir/wh/mst_ledger").exists())
+    tables.filter(t => new java.io.File(s"$dir/wh/$t").exists()).foreach { t =>
+      assert(spark.read.parquet(s"$dir/wh/$t").count() > 0, s"table $t is empty")
+    }
+  }
+
+  test("ticks after a full sync retire its flat layout like any old version") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-flat").toString
+    writeSpec(dir)
+    val fake = new FakeTally
+    v1(fake)
+    Main.run(spark, cfg(dir).copy(syncMode = "full"),
+      transportOverride = Some(fake.transport))
+    v2(fake)
+    Main.run(spark, cfg(dir), transportOverride = Some(fake.transport))
+    v3(fake)
+    Main.run(spark, cfg(dir), transportOverride = Some(fake.transport))
+
+    def layout(t: String) = new java.io.File(s"$dir/wh/$t").list().toSet
+    // rewritten by both ticks: the pointer and at most two versions
+    Seq("mst_ledger", "trn_voucher", "trn_accounting").foreach { t =>
+      val entries = layout(t)
+      assert(entries("CURRENT") && entries.size <= 3 &&
+        (entries - "CURRENT").forall(_.matches("v\\d+")),
+        s"table $t holds $entries")
+    }
+    // no tick changed it: still the full sync's flat table
+    assert(!layout("mst_vouchertype")("CURRENT"))
+
+    val dir2 = java.nio.file.Files.createTempDirectory("graft-flat-full").toString
+    writeSpec(dir2)
+    Main.run(spark, cfg(dir2), transportOverride = Some(fake.transport))
+    val wh = new PartitionedParquetWarehouse(spark, s"$dir/wh")
+    val full = new PartitionedParquetWarehouse(spark, s"$dir2/wh")
+    tables.foreach { t =>
+      assert(sorted(wh.read(t)) == sorted(full.read(t)),
+        s"table $t diverged from full re-sync")
     }
   }
 

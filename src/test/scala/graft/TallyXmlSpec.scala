@@ -146,4 +146,25 @@ class TallyXmlSpec extends AnyFunSuite {
     assert(txns.head.schema.fields.head.dataType ==
       org.apache.spark.sql.types.DateType)
   }
+
+  test("AlterId probe: TDL shape, response parse, closed-company case") {
+    val tdl = TallyXml.alterIdProbeTdl(Some("A & B"))
+    assert(tdl.contains("$AltMstId") && tdl.contains("$AltVchId"))
+    assert(tdl.contains("\"A &amp; B\""))
+    assert(TallyXml.parseAlterIds("\"1234\",\"567\"\r\n")
+      .contains((1234L, 567L)))
+    assert(TallyXml.parseAlterIds("").isEmpty)
+    assert(TallyXml.parseAlterIds("\"x\",\"y\"").contains((0L, 0L)))
+  }
+
+  test("company-info probe parse + config rows") {
+    val resp = "\"guid-1\",\"Acme Ltd\",\"20200401\",\"20210331\",\"†\",\r\n"
+    val info = TallyXml.parseCompanyInfo(resp)
+    assert(info.contains(TallyXml.CompanyInfo(
+      "guid-1", "Acme Ltd", "20200401", "20210331")))
+    val rows = TallyXml.configRows(info.get, "2026-08-12 00:00:00")
+    assert(rows.toMap.apply("Company Name") == "Acme Ltd")
+    assert(rows.toMap.apply("Period From") == "20200401")
+    assert(TallyXml.parseCompanyInfo("").isEmpty)
+  }
 }

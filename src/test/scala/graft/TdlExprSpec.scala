@@ -1,177 +1,15 @@
 package graft
 
 import graft.functions.TdlExpr
-import graft.functions.TdlExpr.TdlTranslationException
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import org.scalatest.funsuite.AnyFunSuite
 
-/** SURVEY §7.3: the `custom`-type TDL → Spark `expr` translator,
-  * exercised on the exact expressions the reference ships
-  * (tally-export-config.yaml:13, 65, 83, 222, 466-470) plus the
-  * reject-unknown contract. */
+/** SURVEY §7.3 P15: the cross-collection lookup shape that
+  * [[graft.operators.SurrogateFk]] resolves. */
 class TdlExprSpec extends AnyFunSuite {
-  lazy val spark = SparkTestSession.spark
-  import spark.implicits._
-
-  private def one(c: org.apache.spark.sql.Column,
-      df: org.apache.spark.sql.DataFrame) =
-    df.select(c.as("v")).collect().map(_.get(0)).toSeq
-
-  test("yaml:13 — parent normalization (IsEqual + SysName)") {
-    // if $$IsEqual:$Parent:$$SysName:Primary then "" else $Parent
-    val tdl = "if $$IsEqual:$Parent:$$SysName:Primary then \"\" else $Parent"
-    val df = Seq("Primary", "primary", "Sales Accounts").toDF("parent")
-    val c = TdlExpr.translate(tdl,
-      { case "Parent" => col("parent") })
-    assert(one(c, df) == Seq("", "", "Sales Accounts"))
-  }
-
-  test("yaml:65 — mailing address flatten (IsEmpty + FullList)") {
-    // if $$IsEmpty:$Address then "" else $$FullList:Address:$Address
-    val tdl = "if $$IsEmpty:$Address then \"\" else $$FullList:Address:$Address"
-    val df = Seq(
-      (1, Seq("12 High St", "Springfield")),
-      (2, Seq.empty[String]),
-      (3, null.asInstanceOf[Seq[String]])).toDF("id", "address")
-    val c = TdlExpr.translate(tdl,
-      { case "Address" => col("address") },
-      { case "Address" => Some(ArrayType(StringType)); case _ => None })
-    assert(one(c, df.orderBy("id")) ==
-      Seq("12 High St Springfield", "", ""))
-  }
-
-  test("yaml:83 — GSTIN fallback with [Last] indexed child access") {
-    // if $$IsEmpty:$PartyGSTIN then $LedGSTRegDetails[Last].GSTIN else $PartyGSTIN
-    val tdl = "if $$IsEmpty:$PartyGSTIN then $LedGSTRegDetails[Last].GSTIN" +
-      " else $PartyGSTIN"
-    val df = Seq(
-      (1, "DIRECT01", Seq(("old", "OLD1"), ("new", "NEW2"))),
-      (2, "", Seq(("old", "OLD1"), ("new", "NEW2"))))
-      .toDF("id", "partygstin", "details")
-      .select(col("id"), col("partygstin"),
-        transform(col("details"),
-          e => struct(e.getField("_1").as("state"),
-            e.getField("_2").as("GSTIN"))).as("details"))
-    val c = TdlExpr.translate(tdl, {
-      case "PartyGSTIN" => col("partygstin")
-      case "LedGSTRegDetails" => col("details")
-    })
-    assert(one(c, df.orderBy("id")) == Seq("DIRECT01", "NEW2"))
-  }
-
-  test("yaml:222 — opening balance fixup (StringFindAndReplace/Number/String)") {
-    // $$StringFindAndReplace:($$Number:$$String:$OpeningBalance):"(-)":"-"
-    val tdl =
-      "$$StringFindAndReplace:($$Number:$$String:$OpeningBalance):\"(-)\":\"-\""
-    val df = Seq("15.5 Nos", "", "7").toDF("ob")
-    val c = TdlExpr.translate(tdl, { case "OpeningBalance" => col("ob") })
-    assert(one(c, df) == Seq("15.5000", null, "7.0000"))
-  }
-
-  test("yaml:466-468 — forex amount (IsDebit/ForexValue companion columns)") {
-    // if $$IsEmpty:$$ForexValue:$Amount then 0 else
-    //   $$StringFindAndReplace:(if $$IsDebit:$Amount then
-    //     -$$ForexValue:$Amount else $$ForexValue:$Amount):"(-)":"-"
-    val tdl = "if $$IsEmpty:$$ForexValue:$Amount then 0 else " +
-      "$$StringFindAndReplace:(if $$IsDebit:$Amount then " +
-      "-$$ForexValue:$Amount else $$ForexValue:$Amount):\"(-)\":\"-\""
-    val df = Seq(
-      (1, BigDecimal("-1000.00"), BigDecimal("12.50")),  // debit w/ forex
-      (2, BigDecimal("600.00"), BigDecimal("7.25")),     // credit w/ forex
-      (3, BigDecimal("250.00"), null.asInstanceOf[BigDecimal]))
-      .toDF("id", "amount", "amount_forex")
-      .select(col("id"), col("amount").cast("decimal(17,2)").as("amount"),
-        col("amount_forex").cast("decimal(17,2)").as("amount_forex"))
-    val c = TdlExpr.translate(tdl, {
-      case "Amount" => col("amount")
-      case "Amount_forex" => col("amount_forex")
-    })
-    val got = df.orderBy("id").select(c.cast("string").as("v"))
-      .collect().map(_.getString(0)).toSeq
-    assert(got == Seq("-12.50", "7.25", "0"))
-  }
-
-  test("tally.mts:565 — yyyymmdd compose (date-part arithmetic)") {
-    val tdl = "(($$YearOfDate:$D)*10000)+(($$MonthOfDate:$D)*100)" +
-      "+(($$DayOfDate:$D)*1)"
-    val df = Seq(java.sql.Date.valueOf("2021-03-31")).toDF("d")
-    val c = TdlExpr.translate(tdl, { case "D" => col("d") })
-    assert(one(c, df) == Seq(20210331L))
-  }
-
-  test("incremental yaml — IsNotApplicable + or, voucher-class predicates") {
-    val tdl = "if ($$IsEmpty:$TrackingNumber or " +
-      "$$IsNotApplicable:$TrackingNumber) then \"\" else $TrackingNumber"
-    val df = Seq("T1", "", "Not Applicable").toDF("tn")
-    val c = TdlExpr.translate(tdl, { case "TrackingNumber" => col("tn") })
-    assert(one(c, df) == Seq("T1", "", ""))
-
-    val vch = Seq((1, 0)).toDF("is_accounting_voucher", "is_order_voucher")
-    val cc = TdlExpr.translate(
-      "if $$IsAccountingVch:$VoucherTypeName then 1 else 0",
-      n => col(n))
-    // if/then/else renders text (the TDL field edge) — parseValue's
-    // TLogical template reads "1"/"0"
-    assert(one(cc, vch) == Seq("1"))
-  }
-
-  test("filters translate: NOT, comparison on a version column") {
-    val df = Seq((1L, false), (9L, true)).toDF("alterid", "cancelled")
-    val c1 = TdlExpr.translate("NOT $IsCancelled",
-      { case "IsCancelled" => col("cancelled") })
-    assert(one(c1, df) == Seq(true, false))
-    val c2 = TdlExpr.translate("$AlterID > 5",
-      { case "AlterID" => col("alterid") })
-    assert(one(c2, df) == Seq(false, true))
-  }
-
-  test("date template: StrByCharCode sentinel + PyrlYYYYMMDDFormat") {
-    val tdl = "if $$IsEmpty:$D then $$StrByCharCode:241" +
-      " else $$PyrlYYYYMMDDFormat:$D:\"-\""
-    val df = Seq(Option(java.sql.Date.valueOf("2020-04-05")), None).toDF("d")
-    val c = TdlExpr.translate(tdl, { case "D" => col("d") })
-    assert(one(c, df) == Seq("2020-04-05", "ñ"))
-  }
-
-  test("unknown $$ markers are rejected with a clear error") {
-    val e = intercept[TdlTranslationException] {
-      TdlExpr.translate("$$FrobnicateValue:$X", n => col(n))
-    }
-    assert(e.getMessage.contains("unknown TDL function $$FrobnicateValue"))
-    assert(e.getMessage.contains("supported:"))
-  }
-
-  test("join-shaped constructs raise targeted errors") {
-    val fk = intercept[TdlTranslationException] {
-      TdlExpr.translate("$Guid:Ledger:$LedgerName", n => col(n))
-    }
-    assert(fk.getMessage.contains("SurrogateFk"))
-    val grp = intercept[TdlTranslationException] {
-      TdlExpr.translate("$$IsLedOfGrp:$Name:$$GroupStock", n => col(n))
-    }
-    assert(grp.getMessage.contains("Hierarchy"))
-  }
 
   test("lookupPattern parses the P15 surrogate-FK shape") {
     assert(TdlExpr.lookupPattern("$Guid:Ledger:$LedgerName")
       .contains(TdlExpr.Lookup("Guid", "Ledger", "LedgerName")))
     assert(TdlExpr.lookupPattern("$Parent").isEmpty)
-  }
-
-  test("validateCustomFields: accepts lookups + scalars, rejects unknown") {
-    import graft.functions.TallyTypes._
-    import graft.sources.{FieldSpec, TableSpec}
-    val ok = TableSpec("t", "Voucher", "Primary", Seq(
-      FieldSpec("_ledger", "$Guid:Ledger:$LedgerName", TCustom),
-      FieldSpec("flag", "if $$IsEmpty:$X then \"\" else $X", TCustom),
-      FieldSpec("plain", "Guid", TText)))
-    TdlExpr.validateCustomFields(ok) // must not throw
-    val bad = ok.copy(fields = Seq(
-      FieldSpec("oops", "$$Bogus:$X", TCustom)))
-    val e = intercept[TdlTranslationException] {
-      TdlExpr.validateCustomFields(bad)
-    }
-    assert(e.getMessage.contains("field oops"))
   }
 }
